@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+Query = Callable[[SparkSession, str], DataFrame]
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the reference's novel
@@ -51,7 +53,7 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-def _utc(fn: Callable[[SparkSession, str], DataFrame]):
+def _utc(fn: Query):
     """Pin the session timezone to UTC for the duration of query
     construction: DuckDB computes on naive timestamps, and a driver
     session running in a non-UTC zone would shift every collected
@@ -66,61 +68,68 @@ def _utc(fn: Callable[[SparkSession, str], DataFrame]):
     return wrapped
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator cluster from SURVEY.md §2.
+# The driver's correctness window: the 50 queries ``queries()`` declares,
+# in order. Pipeline-extension queries come first so a bounded window
+# always covers the riskiest surface (VERDICT r1 #1); the relational
+# anchor follows. Every other registered query is an extra.
+WINDOW: tuple[str, ...] = (
+    "curation_pipeline", "pq_topk_rerank", "semantic_dedup_pruned",
+    "window_extended", "ivf_sq8_topk", "ivf_bq_topk", "bq_codes",
+    "filtered_ann", "filtered_ann_ivf", "ivf_pq_residual_topk",
+    "ann_ivf_lloyd", "knn_descent", "prototype_prune", "mmr_rerank",
+    "retrieval_eval", "bm25_mmr", "pca_power", "mmr_rerank_ivf",
+    "pca_outliers", "unigram_lm", "label_propagation", "unigram_fertility",
+    "text_stats_r1", "tokenizer_compare", "ivf_retrain_delta",
+    "graph_maintained_search", "incremental_snapshot", "graph_refresh",
+    "compaction_plan", "ivf_maintained_topk", "graph_recall_monitor",
+    "ivf_recall_monitor", "index_maintenance_policy", "asof_join",
+    "clean_pack", "decontaminate", "leakage_safe_split", "media_frame_sample",
+    "policy_applied", "video_neardup", "split_drift", "range_join",
+    "events_pivot", "events_unpivot", "embedding_drift",
+    "graph_policy_applied", "drift_policy_applied", "graph_drift_applied",
+    "snapshot_upgrade",
+    # relational (plans/relational.py)
+    "udf_types",
+)
 
-    Ordering is deliberate (VERDICT r1 #1): the LLM-pipeline extension
-    queries — the differentiating, riskiest surface — come FIRST so a
-    bounded correctness window always covers them; the relational
-    catalog (consolidated to ~20 capability-merged queries, see
-    plans/relational.py) follows. The whole declared set fits inside a
-    50-entry window.
-    """
+
+def _registry() -> tuple[dict[str, Query], dict[str, str]]:
+    """Every registered query and oracle: the extension catalog, then the
+    relational catalog."""
     from wasaffi_spark.operators import catalog as op_catalog
     from wasaffi_spark.plans import relational
 
     clash = set(op_catalog.QUERIES) & set(relational.QUERIES)
     assert not clash, f"query name collision: {sorted(clash)}"
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    out.update(op_catalog.QUERIES)
-    out.update(relational.QUERIES)
-    return {name: _utc(fn) for name, fn in out.items()}
+    return (
+        {**op_catalog.QUERIES, **relational.QUERIES},
+        {**op_catalog.ORACLE, **relational.ORACLE},
+    )
 
 
-def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Operators beyond the driver's 50-entry correctness window —
-    hash-checked locally by tools/oracle_check.py (see ORACLE_SWEEP
-    reports) and pinned by pytest, but not part of the declared driver
-    set. NOT called by the driver."""
-    from wasaffi_spark.operators import catalog as op_catalog
-    from wasaffi_spark.plans import relational
+def queries() -> dict[str, Query]:
+    """The driver's window: one entry per name in ``WINDOW``, in order."""
+    qs, _ = _registry()
+    return {name: _utc(qs[name]) for name in WINDOW}
 
-    clash = set(op_catalog.EXTRA_QUERIES) & set(relational.EXTRA_QUERIES)
-    assert not clash, f"extra query name collision: {sorted(clash)}"
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    out.update(op_catalog.EXTRA_QUERIES)
-    out.update(relational.EXTRA_QUERIES)
-    return {name: _utc(fn) for name, fn in out.items()}
+
+def extra_queries() -> dict[str, Query]:
+    """Every registered query outside ``WINDOW`` — hash-checked locally by
+    tools/oracle_check.py (see ORACLE_SWEEP reports) and pinned by
+    pytest. NOT called by the driver."""
+    qs, _ = _registry()
+    return {name: _utc(fn) for name, fn in qs.items() if name not in WINDOW}
+
+
+def oracle_sql() -> dict[str, str]:
+    """DuckDB-runnable oracle for each hash-checkable window query; keys
+    absent here get the driver's weaker rows-only check (approx
+    aggregates, genuinely non-SQL-expressible ops)."""
+    _, oracles = _registry()
+    return {name: oracles[name] for name in WINDOW if name in oracles}
 
 
 def extra_oracle_sql() -> dict[str, str]:
     """DuckDB oracles for ``extra_queries()``. NOT called by the driver."""
-    from wasaffi_spark.operators import catalog as op_catalog
-    from wasaffi_spark.plans import relational
-
-    out = dict(op_catalog.EXTRA_ORACLE)
-    out.update(getattr(relational, "EXTRA_ORACLE", {}))
-    return out
-
-
-def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable oracle for each hash-checkable query; keys absent
-    here get the driver's weaker rows-only check (approx aggregates,
-    genuinely non-SQL-expressible ops)."""
-    from wasaffi_spark.operators import catalog as op_catalog
-    from wasaffi_spark.plans import relational
-
-    out: dict[str, str] = {}
-    out.update(relational.ORACLE)
-    out.update(op_catalog.ORACLE)
-    return out
+    _, oracles = _registry()
+    return {name: sql for name, sql in oracles.items() if name not in WINDOW}

@@ -5,7 +5,7 @@
 reference                                   | here
 --------------------------------------------|----------------------------
 SessionContext::new()                       | SparkSession.builder...
-  .with_function_factory(WasmFunctionFactory)| Engine(spark, function_factory=...)
+  .with_function_factory(...)               | Engine(spark, function_factory=...)
 Float64Array columns a, b                   | createDataFrame(..., "a double, b double")
 ctx.register_batch("t", batch)              | eng.register("t", df)
 CREATE FUNCTION ... AS 'wasm_function.wasm!f1' | the SAME prebuilt .wasm when

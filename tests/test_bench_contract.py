@@ -77,10 +77,9 @@ def test_declared_window_exactly_fifty():
 
 
 def test_driver_window_invariants():
-    """The rotation machinery's structural contract (a mid-r10
-    double-promotion KeyError motivated this pin): the window is
-    exactly 50 queries, every one has an oracle with the SAME key, the
-    window and the extras channel are disjoint, every extra oracle's
+    """The window's structural contract: ``WINDOW`` is exactly 50
+    distinct registered queries, every one has an oracle with the SAME
+    key, the window and the extras are disjoint, every extra oracle's
     key is a real extra query, and every hash-oracled query in the
     repo is either in the window or has had a driver row in some past
     round (zero rotation debt)."""
@@ -92,6 +91,8 @@ def test_driver_window_invariants():
 
     q, o = entrymod.queries(), entrymod.oracle_sql()
     xq, xo = entrymod.extra_queries(), entrymod.extra_oracle_sql()
+    assert len(set(entrymod.WINDOW)) == len(entrymod.WINDOW) == 50
+    assert list(q) == list(entrymod.WINDOW)
     assert len(q) == 50
     assert set(o) == set(q)
     assert not (set(q) & set(xq))

@@ -210,6 +210,20 @@ def test_zero_arg_function_rejected_at_create(engine):
         engine.sql(f"CREATE FUNCTION zf() RETURNS DOUBLE AS '{UDFS}!f1'")
 
 
+def test_wasm_module_reaches_abi_check_without_wasmtime(engine, tmp_path):
+    """The default factory loads a ``.wasm`` definition through the
+    bundled interpreter when wasmtime is absent: a header-only module
+    fails the ABI check at CREATE FUNCTION, naming the missing export."""
+    from wasaffi_spark.errors import ModuleLoadError
+
+    wasm = tmp_path / "empty.wasm"
+    wasm.write_bytes(b"\0asm\x01\0\0\0")
+    with pytest.raises(ModuleLoadError, match="memory"):
+        engine.sql(
+            f"CREATE FUNCTION g(DOUBLE) RETURNS DOUBLE LANGUAGE WASM AS '{wasm}!g'"
+        )
+
+
 def test_uncovered_ddl_falls_through_to_spark(engine):
     # qualified DROP FUNCTION isn't our grammar → must delegate to Spark
     # (which raises its own analysis error), not FunctionDefinitionError

@@ -513,9 +513,7 @@ def test_paragraph_dedup_matches_duckdb_oracle(spark):
     document, documents reassemble in order."""
     import duckdb
 
-    from wasaffi_spark.operators.catalog import EXTRA_ORACLE, ORACLE
-
-    ALL_ORACLE = {**ORACLE, **EXTRA_ORACLE}  # rotation-proof lookup
+    from wasaffi_spark.operators.catalog import ORACLE
     from wasaffi_spark.operators.dedup import paragraph_dedup
 
     rows = [
@@ -533,7 +531,7 @@ def test_paragraph_dedup_matches_duckdb_oracle(spark):
     con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
     want = sorted(
-        tuple(r) for r in con.execute(ALL_ORACLE["paragraph_dedup"]).fetchall()
+        tuple(r) for r in con.execute(ORACLE["paragraph_dedup"]).fetchall()
     )
     assert got == want
     by_id = {r[0]: r for r in got}

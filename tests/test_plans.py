@@ -11,6 +11,7 @@ import pytest
 
 from tests.conftest import SF_SMOKE
 
+from wasaffi_spark.operators import catalog
 from wasaffi_spark.plans import relational
 from wasaffi_spark.plans.inspect import plan_facts
 
@@ -18,30 +19,10 @@ needs_data = pytest.mark.skipif(
     not os.path.isdir(SF_SMOKE), reason="testdata not present"
 )
 
-def _catalog_q(name):
-    """Window-rotation-proof lookup: a query keeps its oracle and plan
-    contract whether it currently sits in the driver window (QUERIES)
-    or the extras channel (EXTRA_QUERIES)."""
-    from wasaffi_spark.operators.catalog import EXTRA_QUERIES, QUERIES
-
-    return QUERIES[name] if name in QUERIES else EXTRA_QUERIES[name]
-
-
-def _rq(name):
-    """Same rotation-proof lookup for the relational module (the r6
-    window rotation moved several long-stable relational rows to the
-    extras channel; plan assertions follow the query, not the
-    channel)."""
-    return (
-        relational.QUERIES[name]
-        if name in relational.QUERIES
-        else relational.EXTRA_QUERIES[name]
-    )
-
 
 @needs_data
 def test_filter_pushdown_reaches_scan(spark):
-    f = plan_facts(_rq("filter_project")(spark, SF_SMOKE))
+    f = plan_facts(relational.QUERIES["filter_project"](spark, SF_SMOKE))
     pushed = " ".join(f.pushed_filters)
     assert "l_shipdate" in pushed and "l_discount" in pushed
     # column pruning: only the 4 referenced columns are read
@@ -52,7 +33,7 @@ def test_filter_pushdown_reaches_scan(spark):
 
 @needs_data
 def test_dimension_join_broadcasts(spark):
-    f = plan_facts(_rq("join_collect_aggs")(spark, SF_SMOKE))
+    f = plan_facts(relational.QUERIES["join_collect_aggs"](spark, SF_SMOKE))
     assert f.broadcast_joins >= 1
     assert f.sortmerge_joins == 0  # the fact side must not shuffle-sort
     # customer scan reads ONLY the join key (group key comes from nation)
@@ -61,7 +42,7 @@ def test_dimension_join_broadcasts(spark):
 
 @needs_data
 def test_agg_scan_pruned(spark):
-    f = plan_facts(_rq("agg_pricing_sets")(spark, SF_SMOKE))
+    f = plan_facts(relational.QUERIES["agg_pricing_sets"](spark, SF_SMOKE))
     [schema] = f.read_schemas
     for col in ("l_quantity", "l_extendedprice", "l_returnflag", "l_linestatus"):
         assert col in schema
@@ -70,7 +51,7 @@ def test_agg_scan_pruned(spark):
 
 @needs_data
 def test_topk_no_global_sort(spark):
-    f = plan_facts(_rq("outer_join_topk")(spark, SF_SMOKE))
+    f = plan_facts(relational.QUERIES["outer_join_topk"](spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in f.text  # top-k, not full sort
     # only the join/group keys are read — no payload columns
     assert "struct<c_custkey:bigint>" in f.read_schemas
@@ -78,7 +59,7 @@ def test_topk_no_global_sort(spark):
 
 @needs_data
 def test_udf_is_arrow_vectorized(spark):
-    f = plan_facts(_rq("udf_pow")(spark, SF_SMOKE))
+    f = plan_facts(relational.QUERIES["udf_pow"](spark, SF_SMOKE))
     assert "ArrowEvalPython" in f.text  # pandas_udf path, not row-Python
     assert "BatchEvalPython" not in f.text
     assert f.read_schemas == ["struct<l_linenumber:int>"]
@@ -87,7 +68,7 @@ def test_udf_is_arrow_vectorized(spark):
 @needs_data
 def test_ann_broadcasts_query_side(spark):
     
-    f = plan_facts(_catalog_q("ann_bruteforce")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["ann_bruteforce"](spark, SF_SMOKE))
     assert f.broadcast_joins >= 1  # query side broadcast; corpus never shuffles
     assert f.sortmerge_joins == 0
 
@@ -99,7 +80,7 @@ def test_tfidf_no_unconditional_vocab_broadcast(spark):
     vocab → runtime broadcast, huge vocab → shuffled join. The only
     static broadcast allowed is the 1-row corpus-count cross join."""
     
-    df = _catalog_q("tfidf")(spark, SF_SMOKE)
+    df = catalog.QUERIES["tfidf"](spark, SF_SMOKE)
     analyzed = df._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in analyzed  # no forced broadcast anywhere
     # and the corpus count is in-plan (an Aggregate under a Join), not a
@@ -109,7 +90,7 @@ def test_tfidf_no_unconditional_vocab_broadcast(spark):
 
 @needs_data
 def test_codegen_present(spark):
-    df = _rq("agg_pricing_sets")(spark, SF_SMOKE)
+    df = relational.QUERIES["agg_pricing_sets"](spark, SF_SMOKE)
     df.collect()  # AQE: codegen ids only appear in the finalized plan
     f = plan_facts(df)
     assert f.codegen_stages >= 1
@@ -123,7 +104,7 @@ def test_simhash_is_shuffle_free(spark):
     exchange — the only Exchange is the narrow-input fan-out
     repartition (RoundRobin), never a hash partitioning."""
     
-    f = plan_facts(_catalog_q("simhash")(spark, SF_SMOKE).orderBy("doc_id"))
+    f = plan_facts(catalog.QUERIES["simhash"](spark, SF_SMOKE).orderBy("doc_id"))
     import re
 
     hash_exchanges = re.findall(r"Arguments: hashpartitioning", f.text)
@@ -137,7 +118,7 @@ def test_decontaminate_train_side_never_shuffles(spark):
     semi-join probe with no Exchange between its scan and the join, and
     the eval-gram side broadcasts."""
     
-    f = plan_facts(_catalog_q("decontaminate")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["decontaminate"](spark, SF_SMOKE))
     assert f.broadcast_joins >= 1 and f.sortmerge_joins == 0
     # exactly three hash exchanges exist, and all are accounted for by
     # the SMALL sides: eval-gram distinct (1) + the two-phase
@@ -154,7 +135,7 @@ def test_paragraph_dedup_two_hash_exchanges(spark):
     import re
 
     
-    f = plan_facts(_catalog_q("paragraph_dedup")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["paragraph_dedup"](spark, SF_SMOKE))
     hash_exchanges = re.findall(r"Arguments: hashpartitioning", f.text)
     assert len(hash_exchanges) == 2, f.text[:2000]
     assert any("doc_id" in s and "text" in s for s in f.read_schemas)
@@ -167,7 +148,7 @@ def test_gopher_filter_shuffle_free(spark):
     import re
 
     
-    f = plan_facts(_catalog_q("gopher_filter")(spark, SF_SMOKE).limit(10))
+    f = plan_facts(catalog.QUERIES["gopher_filter"](spark, SF_SMOKE).limit(10))
     assert not re.findall(r"Arguments: hashpartitioning", f.text), f.text[:2000]
 
 
@@ -211,7 +192,7 @@ def test_pq_encode_is_codegen_with_broadcast_codebook(spark):
     *EvalPython nodes can) and the only join is the broadcast of the
     k-seed codebook — the corpus never shuffles for encoding."""
     
-    df = _catalog_q("pq_codes")(spark, SF_SMOKE)
+    df = catalog.QUERIES["pq_codes"](spark, SF_SMOKE)
     f = plan_facts(df)
     assert "EvalPython" not in f.text
     assert f.broadcast_joins >= 1
@@ -226,7 +207,7 @@ def test_snapshot_diff_single_join_fingerprints_scan_side(spark):
     import re
 
     
-    f = plan_facts(_catalog_q("dataset_diff")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["dataset_diff"](spark, SF_SMOKE))
     # formatted plans print each node twice (tree + detail) — count the
     # numbered detail headers
     joins = re.findall(
@@ -244,7 +225,7 @@ def test_gapfill_spine_is_broadcast(spark):
     series×hour spine joins the hourly aggregate without a sort-merge
     of the raw events."""
     
-    f = plan_facts(_catalog_q("events_gapfill")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["events_gapfill"](spark, SF_SMOKE))
     assert f.broadcast_joins >= 1
     assert "EvalPython" not in f.text
 
@@ -259,7 +240,7 @@ def test_ivf_pq_search_join_is_hash_on_cell(spark):
     import re
 
     
-    f = plan_facts(_catalog_q("ivf_pq_topk")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["ivf_pq_topk"](spark, SF_SMOKE))
     nlj = re.findall(r"\(\d+\) BroadcastNestedLoopJoin", f.text)
     assert len(nlj) == 2, f"expected only the 2 codebook cross joins, got {len(nlj)}"
     hash_joins = re.findall(r"\(\d+\) BroadcastHashJoin", f.text)
@@ -299,7 +280,7 @@ def test_mutual_knn_joins_are_equi_never_nlj(spark):
     mutual symmetrization from an equi-semi-join on (src, dst) — a
     nested-loop anywhere means the all-pairs scan leaked back in."""
     
-    f = plan_facts(_catalog_q("mutual_knn")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["mutual_knn"](spark, SF_SMOKE))
     assert "BroadcastNestedLoopJoin" not in f.text
     assert "CartesianProduct" not in f.text
     # r5: the hyperplane-cell assignment is the one sanctioned Python
@@ -315,7 +296,7 @@ def test_domain_cap_window_rank_is_group_limited(spark):
     (WindowGroupLimit) so a skewed mega-domain never materializes
     beyond its running top-cap rows."""
     
-    f = plan_facts(_catalog_q("domain_cap")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["domain_cap"](spark, SF_SMOKE))
     assert "WindowGroupLimit" in f.text
 
 
@@ -325,7 +306,7 @@ def test_fuzzy_decontamination_is_banded_equi_join(spark):
     equi-join with no nested loop; the train corpus text itself never
     joins, only its 12-hash signatures."""
     
-    f = plan_facts(_catalog_q("fuzzy_decontaminate")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["fuzzy_decontaminate"](spark, SF_SMOKE))
     assert "BroadcastNestedLoopJoin" not in f.text
     assert "CartesianProduct" not in f.text
 
@@ -356,7 +337,7 @@ def test_media_neardup_banded_join_no_nlj(spark):
     nested loop and no Python anywhere (the signature is codegen-side
     expression work)."""
     
-    f = plan_facts(_catalog_q("media_neardup")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["media_neardup"](spark, SF_SMOKE))
     assert "BroadcastNestedLoopJoin" not in f.text
     assert "CartesianProduct" not in f.text
     assert "EvalPython" not in f.text
@@ -367,7 +348,7 @@ def test_strip_boilerplate_equi_joins_only(spark):
     """Boilerplate stripping = doc-frequency equi-join + reassembly;
     a nested loop would mean the (domain, line) key degenerated."""
     
-    f = plan_facts(_catalog_q("strip_boilerplate")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["strip_boilerplate"](spark, SF_SMOKE))
     assert "BroadcastNestedLoopJoin" not in f.text
     assert "CartesianProduct" not in f.text
 
@@ -380,7 +361,7 @@ def test_text_ann_ivf_probe_join_is_hash_on_cell(spark):
     nested-loop nodes allowed are the bounded codebook broadcasts."""
     import re
 
-    f = plan_facts(_catalog_q("text_ann_ivf")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["text_ann_ivf"](spark, SF_SMOKE))
     hash_joins = re.findall(r"\(\d+\) BroadcastHashJoin", f.text)
     assert hash_joins, "probe join must be a broadcast hash join"
     assert re.search(r"keys \[1\]: \[cell#\d+", f.text)
@@ -391,9 +372,7 @@ def test_text_ann_ivf_probe_join_is_hash_on_cell(spark):
 def test_triangle_count_no_cartesian(spark):
     """Triangle enumeration must stay equi-join shaped: oriented wedge
     + closing semi-join — never a nested-loop/cartesian pair scan."""
-    from wasaffi_spark.operators.catalog import EXTRA_QUERIES, QUERIES
-
-    q = {**QUERIES, **EXTRA_QUERIES}["knn_triangles"]
+    q = catalog.QUERIES["knn_triangles"]
     f = plan_facts(q(spark, SF_SMOKE))
     assert "CartesianProduct" not in f.text
     assert "BroadcastNestedLoopJoin" not in f.text
@@ -405,9 +384,7 @@ def test_expectations_inrow_rules_share_one_scan(spark):
     aggregate over ONE scan of orders (adding rules adds expressions,
     not passes); the whole report reads orders at most 3× (in-row +
     unique + referential legs)."""
-    from wasaffi_spark.operators.catalog import EXTRA_QUERIES, QUERIES
-
-    q = {**QUERIES, **EXTRA_QUERIES}["orders_expectations"]
+    q = catalog.QUERIES["orders_expectations"]
     f = plan_facts(q(spark, SF_SMOKE))
     orders_scans = f.text.count("orders.parquet")
     assert orders_scans <= 3, f.text
@@ -459,7 +436,7 @@ def test_filtered_ivf_search_join_is_hash_on_cell(spark):
     per query; centroid attach on each side)."""
     import re
 
-    f = plan_facts(_catalog_q("filtered_ann_ivf")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["filtered_ann_ivf"](spark, SF_SMOKE))
     hash_joins = re.findall(r"\(\d+\) BroadcastHashJoin", f.text)
     assert hash_joins, "search join must be a broadcast hash join"
     # Catalyst folds the attribute equality INTO the hash-join keys:
@@ -480,7 +457,7 @@ def test_ivf_pq_residual_search_join_is_hash_on_cell(spark):
     islands)."""
     import re
 
-    f = plan_facts(_catalog_q("ivf_pq_residual_topk")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["ivf_pq_residual_topk"](spark, SF_SMOKE))
     hash_joins = re.findall(r"\(\d+\) BroadcastHashJoin", f.text)
     assert hash_joins, "candidate join must be a broadcast hash join"
     assert re.search(r"keys \[1\]: \[cell#\d+", f.text), "join key must be cell"
@@ -496,7 +473,7 @@ def test_ivf_lloyd_search_join_is_hash_on_cell(spark):
     expressions)."""
     import re
 
-    f = plan_facts(_catalog_q("ann_ivf_lloyd")(spark, SF_SMOKE))
+    f = plan_facts(catalog.QUERIES["ann_ivf_lloyd"](spark, SF_SMOKE))
     hash_joins = re.findall(r"\(\d+\) BroadcastHashJoin", f.text)
     assert hash_joins, "candidate join must be a broadcast hash join"
     assert re.search(r"keys \[1\]: \[cell#\d+", f.text), "join key must be cell"

@@ -66,7 +66,7 @@ def test_knn_descent_overlay_total_bits_row_identical(emb):
     row total (r14) ≡ the explicit-bits straight line ≡ the prebuilt-
     ring path that still pays the vnorm count."""
     n = emb.count()
-    bits = similarity.auto_sign_bits(n, 32)
+    bits = similarity.auto_sign_bits(n, similarity.KNN_DESCENT_CELL_SIZE)
     auto = similarity.knn_descent(emb, k=4, rounds=1, ring=2)
     explicit = similarity.knn_descent(emb, k=4, rounds=1, ring=2, bits=bits)
     assert _rows(auto) == _rows(explicit)
@@ -76,6 +76,19 @@ def test_knn_descent_overlay_total_bits_row_identical(emb):
     assert total == n
     pre = similarity.knn_descent(emb, k=4, rounds=1, ring=2, ring_edges=ringe)
     assert _rows(pre) == _rows(auto)
+
+
+def test_graph_prologue_bits_share_knn_descent_default():
+    """The graph-family prologue precomputes knn_descent's auto bits, so
+    it must use knn_descent's own default cell size, not a copy of it."""
+    import inspect
+
+    default = inspect.signature(similarity.knn_descent).parameters[
+        "target_cell_size"
+    ].default
+    assert default == similarity.KNN_DESCENT_CELL_SIZE == 32
+    src = inspect.getsource(catalog._graph_family_prologue)
+    assert "auto_sign_bits(n_base, similarity.KNN_DESCENT_CELL_SIZE)" in src
 
 
 @pytest.mark.slow

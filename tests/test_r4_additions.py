@@ -314,9 +314,9 @@ def test_weighted_sample_weight_dominance(spark):
 
 
 def test_quality_buckets_cover_corpus(spark):
-    from wasaffi_spark.operators.catalog import EXTRA_QUERIES, QUERIES
+    from wasaffi_spark.operators.catalog import QUERIES
 
-    rows = {**QUERIES, **EXTRA_QUERIES}["quality_buckets"](
+    rows = QUERIES["quality_buckets"](
         spark, "/root/testdata/sf0.001"
     ).collect()
     assert [r["bucket"] for r in rows] == list(range(1, 11))

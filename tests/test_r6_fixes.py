@@ -126,7 +126,7 @@ def test_media_neardup_valve_binds_and_oracle_mirrors(spark):
     # no pair may touch two low ids
     assert not any(a < 1000 and b < 1000 for a, b, _ in got)
 
-    sql = {**catalog.ORACLE, **catalog.EXTRA_ORACLE}["media_neardup"]
+    sql = catalog.ORACLE["media_neardup"]
     con = duckdb.connect()
     con.register(
         "documents", pd.DataFrame(rows, columns=["doc_id", "text", "source"])

@@ -12,33 +12,22 @@ from tests.conftest import SF_SMOKE
 from wasaffi_spark.plans import relational
 
 
-def _rq(name):
-    """Rotation-proof lookup (r6): agg_pricing_sets / outer_join_topk /
-    window_fns moved to the extras channel; their value pins follow."""
-    return (
-        relational.QUERIES[name]
-        if name in relational.QUERIES
-        else relational.EXTRA_QUERIES[name]
-    )
-
 needs_data = pytest.mark.skipif(
     not os.path.isdir(SF_SMOKE), reason="testdata not present"
 )
 
 
 def test_catalog_well_formed():
-    # every oracle key refers to a registered query (both channels)
+    # every oracle key refers to a registered query
     assert set(relational.ORACLE) <= set(relational.QUERIES)
-    assert set(relational.EXTRA_ORACLE) <= set(relational.EXTRA_QUERIES)
-    # approx aggregates are deliberately rows-only (rotated to the
-    # extras channel in r4)
-    assert "approx_aggs" in relational.EXTRA_QUERIES
-    assert "approx_aggs" not in relational.EXTRA_ORACLE
+    # approx aggregates are deliberately rows-only
+    assert "approx_aggs" in relational.QUERIES
+    assert "approx_aggs" not in relational.ORACLE
 
 
 @needs_data
 def test_scan_and_cross_counts(spark):
-    [row] = _rq("subqueries_cte")(spark, SF_SMOKE).collect()
+    [row] = relational.QUERIES["subqueries_cte"](spark, SF_SMOKE).collect()
     assert row["lineitem_cnt"] == 6000  # scan count(*)
     assert row["region_pairs"] == 25  # region × region cross join
     assert 0 <= row["cnt"] <= 1500
@@ -46,7 +35,7 @@ def test_scan_and_cross_counts(spark):
 
 @needs_data
 def test_agg_pricing_sets_shape(spark):
-    rows = _rq("agg_pricing_sets")(spark, SF_SMOKE).collect()
+    rows = relational.QUERIES["agg_pricing_sets"](spark, SF_SMOKE).collect()
     # cube grains: (a,b) ≤6, (a) ≤3, (b) ≤2, () =1
     assert 4 <= len(rows) <= 12
     # the grand-total row counts every lineitem exactly once
@@ -64,7 +53,7 @@ def test_agg_pricing_sets_shape(spark):
 
 @needs_data
 def test_outer_join_topk_ordering(spark):
-    rows = _rq("outer_join_topk")(spark, SF_SMOKE).collect()
+    rows = relational.QUERIES["outer_join_topk"](spark, SF_SMOKE).collect()
     counts = [r["order_cnt"] for r in rows]
     assert counts == sorted(counts, reverse=True)
     assert len(rows) == 20
@@ -72,7 +61,7 @@ def test_outer_join_topk_ordering(spark):
 
 @needs_data
 def test_window_fns_partitions(spark):
-    rows = _rq("window_fns")(spark, SF_SMOKE).collect()
+    rows = relational.QUERIES["window_fns"](spark, SF_SMOKE).collect()
     seen: dict[int, int] = {}
     prev_ok: dict[int, int | None] = {}
     running: dict[int, float] = {}
@@ -91,7 +80,7 @@ def test_window_fns_partitions(spark):
 @needs_data
 def test_semi_anti_counts_consistent(spark):
     # semi/anti live inside subqueries_cte since the round-3 merge
-    [row] = _rq("subqueries_cte")(spark, SF_SMOKE).collect()
+    [row] = relational.QUERIES["subqueries_cte"](spark, SF_SMOKE).collect()
     n_cust = spark.table("customer").count()
     assert 0 <= row["semi_cnt"] <= n_cust
     assert 0 <= row["anti_cnt"] <= n_cust
@@ -99,7 +88,7 @@ def test_semi_anti_counts_consistent(spark):
 
 @needs_data
 def test_reshape_setops_branches(spark):
-    rows = relational.EXTRA_QUERIES["reshape_setops"](spark, SF_SMOKE).collect()
+    rows = relational.QUERIES["reshape_setops"](spark, SF_SMOKE).collect()
     setops = {r["k1"] for r in rows if r["src"] == "s"}
     assert setops == {"d", "e", "i", "v"} or setops == {"d", "i", "v"}
     assert sorted(r["v"] for r in rows if r["src"] == "s" and r["k1"] == "v") == [98, 99]
@@ -110,7 +99,7 @@ def test_reshape_setops_branches(spark):
 
 @needs_data
 def test_udf_pow_values(spark):
-    rows = _rq("udf_pow")(spark, SF_SMOKE).collect()
+    rows = relational.QUERIES["udf_pow"](spark, SF_SMOKE).collect()
     for r in rows:
         assert r["sq"] == float(r["l_linenumber"]) ** 2
 
@@ -139,17 +128,9 @@ def test_entry_contract(spark):
     # window, extensions first (VERDICT r1 #1)
     assert len(qs) <= 50
     names = list(qs)
-    # extensions first (VERDICT r1 #1) — rotation-proof FOR REAL this
-    # time (the r9 rotation demoted the previously-asserted operator):
-    # assert structurally that EVERY pipeline-extension entry precedes
-    # the relational anchor, whatever the current window contents are
+    # every pipeline-extension entry precedes every relational entry
     from wasaffi_spark.operators import catalog as op_catalog
 
     ext_idx = [names.index(n) for n in names if n in op_catalog.QUERIES]
-    rel_idx = [
-        names.index(n) for n in names if n in relational.QUERIES
-    ]
-    # rotation-proof structurally (the r10 rotation demoted the
-    # previously-named anchor too): every extension entry precedes
-    # every relational entry, whatever the current window contents
+    rel_idx = [names.index(n) for n in names if n in relational.QUERIES]
     assert ext_idx and rel_idx and max(ext_idx) < min(rel_idx)

@@ -52,9 +52,7 @@ def test_tumbling_stream_equals_batch(spark, event_stream):
 
 @needs_data
 def test_session_window_stream_equals_batch(spark, event_stream):
-    from wasaffi_spark.operators.catalog import EXTRA_QUERIES, QUERIES
-
-    OPQ = {**QUERIES, **EXTRA_QUERIES}  # rotation-proof lookup
+    from wasaffi_spark.operators.catalog import QUERIES
 
     stream_ops.run_to_memory(
         stream_ops.session_counts(event_stream), "sessions_test"
@@ -65,7 +63,7 @@ def test_session_window_stream_equals_batch(spark, event_stream):
     }
     want = {
         (r.user_id, r.session_start): r.cnt
-        for r in OPQ["events_session_window"](spark, SF_SMOKE).collect()
+        for r in QUERIES["events_session_window"](spark, SF_SMOKE).collect()
     }
     assert got == want
     # ...and the per-user session count agrees with the lag-based batch op
@@ -97,14 +95,12 @@ def test_sliding_stream_equals_batch(spark, event_stream):
     assert total == 4 * n_events
     # and the full window×type count map equals the oracle-checked
     # batch twin (q_events_sliding)
-    from wasaffi_spark.operators.catalog import EXTRA_QUERIES, QUERIES
+    from wasaffi_spark.operators.catalog import QUERIES
 
-    opq = {**QUERIES, **EXTRA_QUERIES}  # rotation-proof lookup (r6:
-    # events_sliding promoted into the driver window)
     got = {(r.win_start, r.win_end, r.event_type): r.cnt for r in rows}
     want = {
         (r.win_start, r.win_end, r.event_type): r.cnt
-        for r in opq["events_sliding"](spark, SF_SMOKE).collect()
+        for r in QUERIES["events_sliding"](spark, SF_SMOKE).collect()
     }
     assert got == want
 

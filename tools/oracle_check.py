@@ -20,10 +20,6 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 def canon_value(v, sig=12):
     import datetime
@@ -67,6 +63,7 @@ def main():
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from wasaffi_spark.engine import TESTDATA_TABLES
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -80,18 +77,15 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"create view {t} as select * from read_parquet('{p}')")
 
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    # local-only extras: hash-checked here even though the driver's
-    # 50-entry window never sees them
-    if hasattr(entrymod, "extra_queries"):
-        queries.update(entrymod.extra_queries())
-        oracles.update(entrymod.extra_oracle_sql())
+    # the extras are hash-checked here even though the driver's 50-entry
+    # window never sees them
+    queries = {**entrymod.queries(), **entrymod.extra_queries()}
+    oracles = {**entrymod.oracle_sql(), **entrymod.extra_oracle_sql()}
     results = {}
     for name, fn in queries.items():
         if only and name not in only:

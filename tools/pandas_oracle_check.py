@@ -29,10 +29,6 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 def canon_frame(pdf):
     """Column-sorted, row-sorted, cell-stringified frame (no numeric
@@ -77,6 +73,7 @@ def main():
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from wasaffi_spark.engine import TESTDATA_TABLES
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -90,16 +87,13 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"create view {t} as select * from read_parquet('{p}')")
 
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    if hasattr(entrymod, "extra_queries"):
-        queries.update(entrymod.extra_queries())
-        oracles.update(entrymod.extra_oracle_sql())
+    queries = {**entrymod.queries(), **entrymod.extra_queries()}
+    oracles = {**entrymod.oracle_sql(), **entrymod.extra_oracle_sql()}
 
     ok = bad = 0
     for name, fn in queries.items():

@@ -7,15 +7,15 @@ into a *function spec* — enough information to (a) validate the definition
 at the driver and (b) lazily load + call the function inside executor
 Python workers.
 
-Two backends (SURVEY §7.0):
+One factory, :class:`PythonModuleFunctionFactory`, serves both module
+kinds (SURVEY §7.0), dispatching on the path in
+:func:`~wasaffi_spark.udf_runtime.load_module`:
 
-- :class:`PythonModuleFunctionFactory` — ``'path/mod.py!fn'``; dynamic
-  import, the native analog of "load external module, bind exported
-  symbol" (lib.rs:111-132).
-- :class:`WasmFunctionFactory` — ``'path/mod.wasm!fn'``; real WASM via
-  wasmtime speaking the reference's Arrow-IPC bytes-in/bytes-out ABI
-  (/root/reference/wasm_udf/src/lib.rs:51-67). Optional: gated on
-  wasmtime being importable.
+- ``'path/mod.py!fn'`` — dynamic import, the native analog of "load
+  external module, bind exported symbol" (lib.rs:111-132);
+- ``'path/mod.wasm!fn'`` — real WASM speaking the reference's Arrow-IPC
+  bytes-in/bytes-out ABI (the reference's wasm_udf/src/lib.rs:51-67),
+  through wasmtime when importable, else the bundled interpreter.
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ from dataclasses import dataclass
 from typing import Protocol
 
 from .ddl import CreateFunctionStmt, split_definition
-from .errors import ModuleLoadError
 from .udf_runtime import get_function, resolve_module_path
 
 
@@ -70,30 +69,3 @@ class PythonModuleFunctionFactory:
         get_function(resolved, method)
         return FunctionSpec(stmt.name, resolved, method, stmt)
 
-
-class WasmFunctionFactory:
-    """Real-WASM backend (``'module.wasm!fn'``) via wasmtime.
-
-    Byte-level parity with the reference ABI: the guest exports
-    ``__wasm_udf_<fn>`` taking an Arrow IPC stream of the packed argument
-    batch and returning an IPC stream of a single-column result batch
-    (/root/reference/wasmedge_factory/src/udf.rs:82-115,
-    /root/reference/wasm_udf/src/lib.rs:31-43,51-67).
-    """
-
-    def __init__(self, roots: tuple[str, ...] = ()):
-        self._roots = tuple(roots)
-
-    def create(self, stmt: CreateFunctionStmt) -> FunctionSpec:
-        try:
-            import wasmtime  # noqa: F401
-        except ImportError as e:
-            raise ModuleLoadError(
-                "the wasm backend requires the 'wasmtime' package, which is "
-                "not installed in this environment; use the Python-module "
-                "backend ('module.py!fn') instead"
-            ) from e
-        module, method = split_definition(stmt.definition)
-        resolved = resolve_module_path(module, self._roots)
-        get_function(resolved, method)
-        return FunctionSpec(stmt.name, resolved, method, stmt)

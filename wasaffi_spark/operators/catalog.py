@@ -1451,8 +1451,6 @@ def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """For each error event, the latest purchase (ts + value) by the same
     user at-or-before it — the as-of join Spark lacks natively, built as
@@ -1660,8 +1658,6 @@ register(
 )
 
 
-
-
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear bag-of-words quality classifier (fastText / logistic
     family): mean token weight through a sigmoid, model-as-data applied
@@ -1708,24 +1704,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Local-only extra queries: hash-checked by tools/oracle_check.py but NOT
-# part of the driver's declared set — the driver evaluates only the first
-# 50 ``queries()`` entries (VERDICT r1), and all 50 driver slots are
-# taken by green rows we will not displace. New operators land here first
-# with a full DuckDB oracle; promotion into the driver window happens
-# only by consolidating existing entries.
-
-EXTRA_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-EXTRA_ORACLE: dict[str, str] = {}
-
-
-def register_extra(
-    name: str, fn: Callable[[SparkSession, str], DataFrame], oracle: str | None
-):
-    fn.__name__ = f"q_{name}"
-    EXTRA_QUERIES[name] = fn
-    if oracle is not None:
-        EXTRA_ORACLE[name] = oracle
+# Every query registers here; __spark_entry__.WINDOW names the driver's 50.
 
 
 def q_text_stats_r1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1752,7 +1731,7 @@ def q_text_stats_r1(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-register_extra(
+register(
     "text_stats_r1",
     q_text_stats_r1,
     f"""with base as (
@@ -1787,7 +1766,7 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.paragraph_dedup(docs).orderBy("doc_id")
 
 
-register(  # promoted to the driver window in round 3
+register(
     "paragraph_dedup",
     q_paragraph_dedup,
     r"""with d as (select doc_id,
@@ -1823,7 +1802,7 @@ def q_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.gopher_filter(docs).orderBy("doc_id")
 
 
-register(  # promoted to the driver window in round 3
+register(
     "gopher_filter",
     q_gopher_filter,
     f"""with base as (
@@ -1889,7 +1868,7 @@ def q_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "global_shuffle",
     q_global_shuffle,
     """with h as (
@@ -1925,7 +1904,7 @@ def q_countmin_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "countmin_tokens",
     q_countmin_tokens,
     f"""with tok as (
@@ -1970,7 +1949,7 @@ def q_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "group_sample",
     q_group_sample,
     """select doc_id, lang, sample_rank
@@ -1997,7 +1976,7 @@ _PROFILE_VALUES = ", ".join(
     f"('{lang}', '{gram}', {w})" for lang, gram, w in text.DEFAULT_LANG_PROFILES
 )
 
-register_extra(
+register(
     "ngram_lang",
     q_ngram_lang,
     f"""with profiles(plang, gram, w) as (values {_PROFILE_VALUES}),
@@ -2051,7 +2030,7 @@ def q_semantic_dedup(
     )
 
 
-register(  # promoted to the driver window in round 3
+register(
     "semantic_dedup",
     q_semantic_dedup,
     """with e as (select vec_id, embedding::DOUBLE[] as v from embeddings),
@@ -2101,7 +2080,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "inverted_index",
     q_inverted_index,
     r"""with toks as (
@@ -2137,7 +2116,7 @@ def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "pmi_bigrams",
     q_pmi_bigrams,
     r"""with toks as (
@@ -2196,7 +2175,7 @@ def q_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "bloom_dedup",
     q_bloom_dedup,
     """with seen as (
@@ -2274,7 +2253,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "merge_upsert",
     q_merge_upsert,
     """with upd as (
@@ -2338,7 +2317,7 @@ _PR_ITER = """,
             join outdeg o on e.src = o.src
             group by e.dst) s on n.node = s.node)"""
 
-register_extra(
+register(
     "pagerank",
     q_pagerank,
     """with fwd as (
@@ -2378,7 +2357,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "funnel",
     q_funnel,
     """with e as (select user_id, event_type, ts from events),
@@ -2413,7 +2392,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "cohort_retention",
     q_cohort_retention,
     """with wk as (
@@ -2460,7 +2439,7 @@ def q_dataset_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return diffmod.snapshot_diff(a, b).orderBy("doc_id")
 
 
-register_extra(
+register(
     "dataset_diff",
     q_dataset_diff,
     """with b as (
@@ -2493,7 +2472,7 @@ def q_events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "events_gapfill",
     q_events_gapfill,
     """with hourly as (
@@ -2526,7 +2505,7 @@ def q_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.novelty_score(docs).orderBy("doc_id")
 
 
-register_extra(
+register(
     "novelty",
     q_novelty,
     f"""with {_SHINGLES_CTE},
@@ -2581,7 +2560,7 @@ def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "s_start", "e_start")
 
 
-register_extra(
+register(
     "interval_overlap",
     q_interval_overlap,
     """with s as (
@@ -2617,7 +2596,7 @@ def q_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "temperature_mixture",
     q_temperature_mixture,
     f"""with counts as (select lang, count(*) as n_d from documents group by 1),
@@ -2656,7 +2635,7 @@ def _pq_dist_sql(j: int) -> str:
     return f"cast({terms} as bigint)"
 
 
-register(  # promoted to the driver window in round 3
+register(
     "pq_codes",
     q_pq_codes,
     f"""with e as (select vec_id, embedding::DOUBLE[] as v from embeddings),
@@ -2734,7 +2713,7 @@ def q_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "scd2_merge",
     q_scd2_merge,
     """with cur as (
@@ -2806,7 +2785,7 @@ def _pq_qdist_sql(j: int) -> str:
 
 _PQ_M, _PQ_K = similarity.PQ_M, similarity.PQ_K
 
-register_extra(
+register(
     "pq_topk",
     q_pq_topk,
     f"""with e as (select vec_id, embedding::DOUBLE[] as v from embeddings),
@@ -2855,7 +2834,7 @@ register_extra(
 )
 
 
-register_extra("ann_ivf_trained", q_ann_ivf_trained, None)
+register("ann_ivf_trained", q_ann_ivf_trained, None)
 
 
 PQ_RERANK = 96  # ≳ N/codebook_k at sf0.1: covers the ADC tie group
@@ -2880,7 +2859,7 @@ def q_pq_topk_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "rank")
 
 
-register_extra(
+register(
     "pq_topk_rerank",
     q_pq_topk_rerank,
     f"""with e as (select vec_id, embedding::DOUBLE[] as v from embeddings),
@@ -3049,7 +3028,7 @@ def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "events_sliding",
     q_events_sliding,
     """with g as (
@@ -3100,7 +3079,7 @@ def q_window_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "window_extended",
     q_window_extended,
     """select o_custkey, o_orderkey,
@@ -3147,7 +3126,7 @@ def q_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "fuzzy_pairs",
     q_fuzzy_pairs,
     """with a as (select p_brand, p_size, p_partkey as key_a,
@@ -3188,7 +3167,7 @@ def q_lang_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "lang_top_tokens",
     q_lang_top_tokens,
     f"""with toks as (
@@ -3237,7 +3216,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "curation_pipeline",
     q_curation_pipeline,
     f"""with keepers as (
@@ -3328,7 +3307,7 @@ def q_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CSVJSON_DIR = None
 
-register_extra(
+register(
     "csv_json_roundtrip",
     q_csv_json_roundtrip,
     """with agg as (
@@ -3354,7 +3333,7 @@ def q_ngram_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_span_dedup(docs, k=NGRAM_SPAN_K).orderBy("doc_id")
 
 
-register(  # promoted to the driver window in round 3
+register(
     "ngram_span_dedup",
     q_ngram_span_dedup,
     f"""with toks as (
@@ -3409,7 +3388,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SH_BANDS, _SH_BB = 4, 12
 
-register_extra(
+register(
     "simhash_pairs",
     q_simhash_pairs,
     f"""with sig as (select doc_id, simhash from ({_simhash_oracle()})),
@@ -3456,7 +3435,7 @@ _MIX_W_CASE = " ".join(
     f"when lang = '{d}' then {w}" for d, w in sorted(MIX_EPOCH_WEIGHTS.items())
 )
 
-register_extra(
+register(
     "mixture_epochs",
     q_mixture_epochs,
     f"""with w as (
@@ -3487,8 +3466,8 @@ register_extra(
 
 # ---------------------------------------------------------------------------
 # round-4 batch 2: data-selection + fuzzy-decontamination + curation caps
-# + contrastive mining + kNN-graph — extras (driver window full), both
-# sweep comparators + pytest.
+# + contrastive mining + kNN-graph, checked by both sweep comparators +
+# pytest.
 
 DSIR_BUCKETS = 256
 DSIR_ALPHA = 1.0
@@ -3519,7 +3498,7 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-register_extra(
+register(
     "dsir_select",
     q_dsir_select,
     f"""with tk as (
@@ -3598,7 +3577,7 @@ _FUZZY_AGREE = " + ".join(
     f"(t.h{i} = e.h{i})::int" for i in range(NUM_PERM)
 )
 
-register_extra(
+register(
     "fuzzy_decontaminate",
     q_fuzzy_decontaminate,
     f"""with {_SIG_CTE},
@@ -3644,7 +3623,7 @@ def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-register_extra(
+register(
     "domain_cap",
     q_domain_cap,
     f"""with r as (
@@ -3676,7 +3655,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "rnk")
 
 
-register_extra(
+register(
     "hard_negatives",
     q_hard_negatives,
     f"""with q as (select vec_id as qid, label as qlabel,
@@ -3738,7 +3717,7 @@ _MUTUAL_KNN_CTES = f"""{_knn_edges_ctes(KNN_K)},
           from e a join e b on a.src = b.dst and a.dst = b.src
           where a.src < a.dst)"""
 
-register_extra(
+register(
     "mutual_knn",
     q_mutual_knn,
     f"""with {_MUTUAL_KNN_CTES}
@@ -3761,7 +3740,7 @@ def q_knn_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph.triangle_count(pairs).orderBy("node")
 
 
-register_extra(
+register(
     "knn_triangles",
     q_knn_triangles,
     f"""with {_MUTUAL_KNN_CTES},
@@ -3808,7 +3787,7 @@ def q_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "embedding_clusters",
     q_embedding_clusters,
     f"""with recursive {_MUTUAL_KNN_CTES},
@@ -3887,7 +3866,7 @@ def _ahash_seg_bits_sql(nseg: int) -> str:
     return " + ".join(terms)
 
 
-register_extra(
+register(
     "media_neardup",
     q_media_neardup,
     f"""with m as (
@@ -3950,7 +3929,7 @@ def q_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-register_extra(
+register(
     "curriculum_interleave",
     q_curriculum,
     """with r as (
@@ -3980,7 +3959,7 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pipeline.corpus_report(docs).orderBy("source")
 
 
-register_extra(
+register(
     "corpus_report",
     q_corpus_report,
     r"""with h as (
@@ -4045,7 +4024,7 @@ def q_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("doc_id")
 
 
-register_extra(
+register(
     "strip_boilerplate",
     q_strip_boilerplate,
     rf"""with tk as (
@@ -4170,7 +4149,7 @@ def _train_classifier_oracle(
     )
 
 
-register_extra(
+register(
     "train_classifier",
     q_train_classifier,
     _train_classifier_oracle(256, 0.5, 3),
@@ -4236,7 +4215,7 @@ def q_doc_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-register_extra(
+register(
     "doc_embeddings",
     q_doc_embeddings,
     f"""with {_HASHED_EMB_CTES}
@@ -4265,7 +4244,7 @@ def q_text_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "rnk")
 
 
-register_extra(
+register(
     "text_ann",
     q_text_ann,
     f"""with {_HASHED_EMB_CTES},
@@ -4373,7 +4352,7 @@ def _bpe_oracle(k: int) -> str:
     return ctes + "\n        " + select
 
 
-register_extra("bpe_merges", q_bpe_merges, _bpe_oracle(BPE_K))
+register("bpe_merges", q_bpe_merges, _bpe_oracle(BPE_K))
 
 
 def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4444,7 +4423,7 @@ def _bpe_fertility_oracle(k: int) -> str:
     )
 
 
-register_extra("bpe_fertility", q_bpe_fertility, _bpe_fertility_oracle(BPE_K))
+register("bpe_fertility", q_bpe_fertility, _bpe_fertility_oracle(BPE_K))
 
 
 def q_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4549,7 +4528,7 @@ def _classifier_eval_oracle(n_buckets: int, lr: float, iterations: int) -> str:
     )
 
 
-register_extra(
+register(
     "classifier_eval",
     q_classifier_eval,
     _classifier_eval_oracle(256, 0.5, 3),
@@ -4569,7 +4548,7 @@ def q_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "length_percentiles",
     q_length_percentiles,
     r"""with n as (
@@ -4615,7 +4594,7 @@ def q_text_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "rnk")
 
 
-register_extra(
+register(
     "text_ann_ivf",
     q_text_ann_ivf,
     f"""with {_HASHED_EMB_CTES},
@@ -4784,7 +4763,7 @@ def q_text_semantic_dedup(
     ).orderBy("vec_id")
 
 
-register_extra(
+register(
     "text_semantic_dedup",
     q_text_semantic_dedup,
     f"""with {_HASHED_EMB_CTES},
@@ -4805,95 +4784,13 @@ def q_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.compression_ratio(docs).orderBy("doc_id")
 
 
-register_extra("compression_ratio", q_compression_ratio, None)
-
-
-# ---------------------------------------------------------------------------
-# round-4 driver-window rotation (VERDICT r3 next-round #5): every
-# operator should appear in the driver's hard hash signal at least once
-# across rounds. Long-stable queries (hash-green since r1/r2, still
-# pytest- and sweep-checked as extras) cede their slots to operators
-# that had only sweep coverage. Oracles travel with the query in both
-# directions, so the local two-comparator sweep still covers ALL of them.
-
-
-def _demote(*names: str) -> None:
-    for n in names:
-        EXTRA_QUERIES[n] = QUERIES.pop(n)
-        if n in ORACLE:
-            EXTRA_ORACLE[n] = ORACLE.pop(n)
-
-
-def _promote(*names: str) -> None:
-    for n in names:
-        QUERIES[n] = EXTRA_QUERIES.pop(n)
-        if n in EXTRA_ORACLE:
-            ORACLE[n] = EXTRA_ORACLE.pop(n)
-
-
-_promote(
-    "merge_upsert",
-    "scd2_merge",
-    "pagerank",
-    "funnel",
-    "cohort_retention",
-    "dataset_diff",
-    "events_gapfill",
-    "inverted_index",
-    "pmi_bigrams",
-    "bloom_dedup",
-    "countmin_tokens",
-)
-_demote(
-    "copy_roundtrip",
-    "quality_score",
-    "embedding_transform",
-    "train_split",
-    "fingerprints",
-)
-
-# Second r4 rotation wave: the 13 operators added later in round 4 (all
-# hash-green under both local comparators — see ORACLE_SWEEP_r04) take
-# the driver slots of 13 long-stable rows (hash-green in the r1–r3
-# driver windows AND still sweep+pytest-checked as extras). The window
-# stays exactly 50 with the relational + UDF-parity tail intact.
-_promote(
-    "dsir_select",
-    "fuzzy_decontaminate",
-    "domain_cap",
-    "hard_negatives",
-    "mutual_knn",
-    "media_neardup",
-    "curriculum_interleave",
-    "corpus_report",
-    "strip_boilerplate",
-    "embedding_clusters",
-    "train_classifier",
-    "doc_embeddings",
-    "text_ann",
-)
-_demote(
-    "simhash",
-    "jaccard_pairs",
-    "emb_neardup",
-    "text_stats",
-    "decontaminate",
-    "chunk_documents",
-    "vocab_topk",
-    "tfidf",
-    "pipeline_train_set",
-    "clean_pack",
-    "asof_join",
-    "range_join",
-    "events_rollup",
-)
+register("compression_ratio", q_compression_ratio, None)
 
 
 # ---------------------------------------------------------------------------
 # round-4 additions: BM25 retrieval, bigram-LM scoring, Z-order layout,
-# ORC sink/source roundtrip, canonical-pick dedup. All register as
-# extras (the 50-entry driver window is full and this round's rotation
-# already landed); the two-comparator local sweep hash-checks them.
+# ORC sink/source roundtrip, canonical-pick dedup; the two-comparator
+# local sweep hash-checks them.
 
 BM25_QUERY_TERMS = [
     ("q1", "dup"),
@@ -4974,7 +4871,7 @@ def _bm25_sql(src: str, out_id: str, k: int) -> str:
        order by query_id, rank"""
 
 
-register_extra(
+register(
     "bm25_topk",
     q_bm25_topk,
     _bm25_sql("select doc_id as id, text as txt from documents", "doc_id", BM25_K),
@@ -5025,7 +4922,7 @@ _BM25_CHUNK_SRC = f"""
                  chunk_text as txt
           from chunks where chunk_text <> ''"""
 
-register_extra(
+register(
     "bm25_passages",
     q_bm25_passages,
     _bm25_sql(_BM25_CHUNK_SRC, "pid", BM25_K),
@@ -5050,7 +4947,7 @@ def q_dataset_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("shard")
 
 
-register_extra(
+register(
     "dataset_manifest",
     q_dataset_manifest,
     f"""with rows_h as (
@@ -5109,7 +5006,7 @@ _LM_CORE = f"""toksf as (
                  cast(sum(m) as bigint) as lp
           from contrib group by doc_id)"""
 
-register_extra(
+register(
     "lm_doc_score",
     q_lm_doc_score,
     f"""with {_LM_CORE}
@@ -5156,7 +5053,7 @@ def q_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "quality_buckets",
     q_quality_buckets,
     f"""with {_LM_CORE},
@@ -5198,7 +5095,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from .pipeline import WEIGHTED_SEED as _WSEED  # noqa: E402
 
-register_extra(
+register(
     "weighted_sample",
     q_weighted_sample,
     f"""with u as (
@@ -5276,7 +5173,7 @@ def _zorder_oracle() -> str:
        from z group by 1 order by cell"""
 
 
-register_extra("zorder_cells", q_zorder_cells, _zorder_oracle())
+register("zorder_cells", q_zorder_cells, _zorder_oracle())
 
 
 _ORC_DIR = None
@@ -5316,7 +5213,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "orc_roundtrip",
     q_orc_roundtrip,
     """select o_orderstatus, count(*) as cnt,
@@ -5353,7 +5250,7 @@ def q_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-register_extra(
+register(
     "cluster_canonical",
     q_cluster_canonical,
     f"""with recursive {_SIG_CTE},
@@ -5417,7 +5314,7 @@ def q_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "entity_clusters",
     q_entity_clusters,
     """with recursive a as (
@@ -5501,7 +5398,7 @@ def q_dup_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "dup_grams",
     q_dup_grams,
     f"""with toks as (
@@ -5530,50 +5427,8 @@ register_extra(
 
 
 # ---------------------------------------------------------------------------
-# round-5 driver-window rotation (r4 VERDICT next-round #5): the 13
-# operators added in round 4 that were sweep-green under both local
-# comparators but never driver-hash-checked take the slots of 13
-# long-stable rows (hash-green in the r1-r4 driver windows AND still
-# sweep+pytest-checked as extras). text_semantic_dedup is promoted only
-# now that the k∝N auto knob landed (it was an 18 s query in r4; the
-# knob cut its 10x probe from 15.5x to 1.65x). The relational + UDF
-# parity tail keeps its slots, and the window stays exactly 50.
-
-_promote(
-    "bpe_merges",
-    "classifier_eval",
-    "bm25_topk",
-    "bm25_passages",
-    "text_ann_ivf",
-    "text_semantic_dedup",
-    "zorder_cells",
-    "orc_roundtrip",
-    "dataset_manifest",
-    "weighted_sample",
-    "quality_buckets",
-    "dup_grams",
-    "entity_clusters",
-)
-_demote(
-    "dedup_exact",
-    "minhash_signatures",
-    "minhash_lsh_pairs",
-    "dedup_clusters",
-    "ann_bruteforce",
-    "ann_bucketed",
-    "media_features",
-    "grouped_median",
-    "udtf_tokens",
-    "events_session_window",
-    "skew_salted_join",
-    "paragraph_dedup",
-    "gopher_filter",
-)
-
-
-# ---------------------------------------------------------------------------
 # round-5 additions: data-quality expectations, graph triangles (above),
-# tokenizer apply (above). All land as extras first (rotation policy).
+# tokenizer apply (above).
 
 EXPECT_STATUS = ("O", "F", "P")
 
@@ -5608,7 +5463,7 @@ def q_orders_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return expect.expectations_report(orders, rules).orderBy("rule")
 
 
-register_extra(
+register(
     "orders_expectations",
     q_orders_expectations,
     """with base as (
@@ -5673,7 +5528,7 @@ def q_events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     return temporal.ewma(events).orderBy("user_id", "event_id")
 
 
-register_extra(
+register(
     "events_ewma",
     q_events_ewma,
     """with recursive q as (
@@ -5759,7 +5614,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "hybrid_rrf",
     q_hybrid_rrf,
     f"""with bm as (
@@ -5823,7 +5678,6 @@ register_extra(
 )
 
 
-
 def q_hybrid_rrf_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid RRF with the IVF-routed dense leg (r6 — VERDICT r5 wrong
     #3/next #4): same integer-exact reciprocal-rank fusion as
@@ -5879,7 +5733,7 @@ def q_hybrid_rrf_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "hybrid_rrf_ivf",
     q_hybrid_rrf_ivf,
     f"""with bm as (
@@ -6012,7 +5866,7 @@ _SQ8_CTES = """sqe as (select vec_id, embedding::DOUBLE[] as v from embeddings),
                          as code_norm_sq
                 from sqc)"""
 
-register_extra(
+register(
     "sq8_codes",
     q_sq8_codes,
     f"""with {_SQ8_CTES}
@@ -6041,7 +5895,7 @@ def q_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.sq8_topk(probes, emb, k=ANN_K).orderBy("qid", "rank")
 
 
-register_extra(
+register(
     "sq8_topk",
     q_sq8_topk,
     f"""with {_SQ8_CTES},
@@ -6088,7 +5942,7 @@ def q_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "rank")
 
 
-register_extra(
+register(
     "ivf_sq8_topk",
     q_ivf_sq8_topk,
     f"""with e as (select vec_id, embedding::DOUBLE[] as v from embeddings),
@@ -6158,7 +6012,7 @@ def q_ivf_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "rank")
 
 
-register_extra(
+register(
     "ivf_bq_topk",
     q_ivf_bq_topk,
     f"""with e as (select vec_id, embedding::DOUBLE[] as v from embeddings),
@@ -6238,7 +6092,7 @@ def q_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "rnk")
 
 
-register_extra(
+register(
     "filtered_ann",
     q_filtered_ann,
     f"""with q as (select vec_id as qid, label as fq,
@@ -6288,7 +6142,7 @@ def q_filtered_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "rnk")
 
 
-register_extra(
+register(
     "filtered_ann_ivf",
     q_filtered_ann_ivf,
     f"""with e as (select vec_id, label, embedding::DOUBLE[] as v
@@ -6368,7 +6222,7 @@ _BQ_CTES = """bqe as (select vec_id, embedding::DOUBLE[] as v from embeddings),
                             as bigint) as w1
                 from bqe)"""
 
-register_extra(
+register(
     "bq_codes",
     q_bq_codes,
     f"""with {_BQ_CTES}
@@ -6394,7 +6248,7 @@ def q_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.bq_topk(probes, emb, k=ANN_K).orderBy("qid", "rank")
 
 
-register_extra(
+register(
     "bq_topk",
     q_bq_topk,
     f"""with {_BQ_CTES},
@@ -6441,7 +6295,7 @@ def q_kanon_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "kanon_audit",
     q_kanon_audit,
     f"""with c as (
@@ -6488,7 +6342,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_src", "id_dst")
 
 
-register_extra(
+register(
     "containment_pairs",
     q_containment_pairs,
     f"""with toks0 as (select doc_id, lang, {_TOKS} as w from documents),
@@ -6557,7 +6411,7 @@ def q_events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(*cols).orderBy("day")
 
 
-register_extra(
+register(
     "events_pivot",
     q_events_pivot,
     f"""select strftime(ts, '%Y-%m-%d') as day,
@@ -6587,7 +6441,7 @@ def q_semantic_dedup_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "semantic_dedup_pruned",
     q_semantic_dedup_pruned,
     """with e as (select vec_id, embedding::DOUBLE[] as v from embeddings),
@@ -6635,7 +6489,7 @@ def q_events_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "events_unpivot",
     q_events_unpivot,
     """select strftime(ts, '%Y-%m-%d') as day,
@@ -6671,7 +6525,7 @@ def q_orders_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "orders_profile",
     q_orders_profile,
     "\n        union all\n".join(
@@ -6689,141 +6543,9 @@ register_extra(
 
 
 # ---------------------------------------------------------------------------
-# round-6 driver-window rotation (VERDICT r5 next-round #1 — the single
-# highest-leverage item): 32 sweep-green queries had never appeared in
-# any driver window r1-r5; 30 of them (all but the two registered
-# without oracles — ann_ivf_trained and compression_ratio stay
-# rows-only extras) plus the new hybrid_rrf_ivf take the slots of 31
-# long-stable rows (hash-green in earlier driver windows AND still
-# sweep+pytest-checked as extras). Kept as anchors: the §2A UDF rows,
-# the queries CHANGED this round (media_neardup with the wired valve,
-# text_semantic_dedup on the pruned engine, semantic_dedup with the
-# single-execution knob), the r5 scale-fix rows (embedding_clusters,
-# mutual_knn), and one representative per major family (ANN, ranking,
-# training, graph). The window stays exactly 50.
-
-_promote(
-    "bpe_fertility",
-    "cluster_canonical",
-    "containment_pairs",
-    "csv_json_roundtrip",
-    "curation_pipeline",
-    "events_ewma",
-    "events_pivot",
-    "events_sliding",
-    "events_unpivot",
-    "fuzzy_pairs",
-    "global_shuffle",
-    "group_sample",
-    "hybrid_rrf",
-    "hybrid_rrf_ivf",
-    "interval_overlap",
-    "kanon_audit",
-    "knn_triangles",
-    "lang_top_tokens",
-    "length_percentiles",
-    "lm_doc_score",
-    "mixture_epochs",
-    "ngram_lang",
-    "novelty",
-    "orders_expectations",
-    "orders_profile",
-    "pq_topk",
-    "pq_topk_rerank",
-    "semantic_dedup_pruned",
-    "simhash_pairs",
-    "temperature_mixture",
-    "window_extended",
-)
-_demote(
-    "bloom_dedup",
-    "bm25_passages",
-    "bm25_topk",
-    "cohort_retention",
-    "corpus_report",
-    "countmin_tokens",
-    "dataset_diff",
-    "dataset_manifest",
-    "doc_embeddings",
-    "domain_cap",
-    "dup_grams",
-    "entity_clusters",
-    "events_gapfill",
-    "funnel",
-    "fuzzy_decontaminate",
-    "hard_negatives",
-    "inverted_index",
-    "merge_upsert",
-    "ngram_span_dedup",
-    "orc_roundtrip",
-    "pmi_bigrams",
-    "pq_codes",
-    "scd2_merge",
-    "strip_boilerplate",
-    "text_ann",
-    "zorder_cells",
-)
-
-# Second r6 wave: the quantization-ladder members added THIS round
-# (SQ8 + binary quantization ADC top-k — hash-green under both local
-# comparators at sf0.01 and sf0.001) enter the window immediately so
-# their first external attestation happens in the round that built
-# them. They take the slots of two multiply-attested anchors: ann_ivf
-# (driver-green r4+r5; the ANN family keeps ivf_pq_topk, text_ann_ivf,
-# pq_topk, pq_topk_rerank in-window) and pagerank (driver-green r1-r5;
-# the graph family keeps knn_triangles, which joins CC and PageRank).
-_promote(
-    "sq8_topk",
-    "bq_topk",
-)
-_demote(
-    "ann_ivf",
-    "pagerank",
-)
-
-
-# ---------------------------------------------------------------------------
-# round-7 driver-window rotation (VERDICT r6 next-round #1 and #4): the
-# 7 r6 additions that have never sat in a driver window become
-# driver-attested, plus the new filtered_ann_ivf composition (#3).
-# ivf_sq8_topk / ivf_bq_topk REPLACE their flat rungs sq8_topk /
-# bq_topk (#4: the window attests the scale paths — candidates
-# O(N·n_probe/n_cells) — not the Q×N linear scans; the flat rungs stay
-# sweep+pytest-checked extras and remain the documented baselines).
-# The other demotions are r6-attested rows whose families stay
-# represented: events_sliding/events_ewma carry the events family for
-# pivot/unpivot, orders_expectations carries orders QA for
-# kanon_audit/orders_profile, the sources family keeps its pytest
-# roundtrips for csv_json_roundtrip, and weighted_sample (driver-green
-# r5+r6) cedes to the sampling family's curation_pipeline/group_sample.
-# The window stays exactly 50.
-_promote(
-    "ivf_sq8_topk",
-    "ivf_bq_topk",
-    "sq8_codes",
-    "bq_codes",
-    "filtered_ann",
-    "filtered_ann_ivf",
-    "ann_ivf_trained",
-    "compression_ratio",
-)
-_demote(
-    "sq8_topk",
-    "bq_topk",
-    "events_pivot",
-    "events_unpivot",
-    "csv_json_roundtrip",
-    "kanon_audit",
-    "orders_profile",
-    "weighted_sample",
-)
-
-
-# ---------------------------------------------------------------------------
 # round-7 addition: residual IVF-PQ — the textbook Jégou IVF-ADC form
 # (PQ over residuals to the coarse centroid; per-(query, probed-cell)
-# ADC tables). Registers as an extra per rotation policy (the 50-slot
-# window is full; this is the natural r8 promotion).
+# ADC tables).
 
 RESPQ_CELLS = 16
 RESPQ_PROBE = 4
@@ -6861,7 +6583,7 @@ def q_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "rank")
 
 
-register_extra(
+register(
     "ivf_pq_residual_topk",
     q_ivf_pq_residual_topk,
     f"""with e as (select vec_id, embedding::DOUBLE[] as v from embeddings),
@@ -6957,17 +6679,6 @@ register_extra(
        where rank <= {ANN_K}
        order by qid, rank""",
 )
-
-# Late-r7 swap: the residual IVF-PQ composition enters the window in
-# the round that built it (precedent: the r6 wave), REPLACING the flat
-# pq_topk rung — the same "window attests scale paths, not Q×N linear
-# scans" rule the r7 rotation applied to sq8/bq. The PQ family stays
-# triple-covered in-window (ivf_pq_topk shared-quantizer form,
-# pq_topk_rerank refine stage, ivf_pq_residual_topk textbook form);
-# flat pq_topk remains a sweep+pytest-checked extra and the documented
-# recall-ladder baseline. The window stays exactly 50.
-_promote("ivf_pq_residual_topk")
-_demote("pq_topk")
 
 
 # ---------------------------------------------------------------------------
@@ -7082,7 +6793,7 @@ _LLOYD_TRAIN_ASSIGN_CTES = f"""e as (select vec_id, embedding::DOUBLE[] as v fro
           from adf group by vec_id)"""
 
 
-register_extra(
+register(
     "ann_ivf_lloyd",
     q_ann_ivf_lloyd,
     f"""with {_LLOYD_TRAIN_ASSIGN_CTES},
@@ -7185,7 +6896,7 @@ def _lloyd_append_ctes(p: str = "") -> str:
 _LLOYD_APPEND_CTES = _lloyd_append_ctes()
 
 
-register_extra(
+register(
     "ivf_append",
     q_ivf_append,
     f"""with {_LLOYD_APPEND_CTES},
@@ -7244,7 +6955,7 @@ def q_ivf_retrain_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
-register_extra(
+register(
     "ivf_retrain_delta",
     q_ivf_retrain_delta,
     f"""with {_LLOYD_APPEND_CTES},
@@ -7401,7 +7112,7 @@ def _descent_graph_ctes(src: str = "embeddings") -> str:
 _DESCENT_GRAPH_CTES = _descent_graph_ctes()
 
 
-register_extra(
+register(
     "knn_descent",
     q_knn_descent,
     f"""with {_DESCENT_GRAPH_CTES}
@@ -7518,7 +7229,7 @@ def _gs_round_sql(
                    from {p}gsc{n}) t where rnk <= {beam})"""
 
 
-register_extra(
+register(
     "graph_search_topk",
     q_graph_search,
     f"""with {_DESCENT_GRAPH_CTES},
@@ -7585,7 +7296,7 @@ def q_graph_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("src", "rnk")
 
 
-register_extra(
+register(
     "graph_insert",
     q_graph_insert,
     f"""with ebase as (select vec_id, embedding from embeddings
@@ -7634,8 +7345,7 @@ register_extra(
 # half of the maintenance story (FreshDiskANN delete rule): dropping a
 # node must patch the holes it leaves (in-neighbours inherit its
 # out-neighbours as repair candidates) or accumulated deletions
-# fragment the graph and recall silently decays. Registered as an
-# extra (rotation policy: extras first; the r9 window is full).
+# fragment the graph and recall silently decays.
 
 GDEL_MOD = 16  # vec_id % GDEL_MOD == 3 is the deleted slice
 
@@ -7663,7 +7373,7 @@ def q_graph_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("src", "rnk")
 
 
-register_extra(
+register(
     "graph_delete",
     q_graph_delete,
     f"""with {_DESCENT_GRAPH_CTES},
@@ -7733,8 +7443,8 @@ def _graph_family_prologue(spark: SparkSession, sf_dir: str):
     replace. ``dbits`` (r14): the descent build's auto-bits knob,
     derived from the overlay ranking's exact base row count instead of
     a separate O(N) count job inside ``knn_edges_bucketed`` — the same
-    ``auto_sign_bits(|base|, 32)`` value by construction, so every
-    cell and edge is identical."""
+    ``auto_sign_bits(|base|, KNN_DESCENT_CELL_SIZE)`` value by
+    construction, so every cell and edge is identical."""
     emb = _table(spark, sf_dir, "embeddings")
     base = emb.where(F.col("vec_id") % IAP_MOD != IAP_MOD - 1)
     batch = emb.where(F.col("vec_id") % IAP_MOD == IAP_MOD - 1)
@@ -7749,7 +7459,7 @@ def _graph_family_prologue(spark: SparkSession, sf_dir: str):
     batch_nf = nf.where(F.col("_vid") % IAP_MOD == IAP_MOD - 1)
     # knn_descent's default target_cell_size (the value the dropped
     # count job would have fed)
-    dbits = similarity.auto_sign_bits(n_base, 32)
+    dbits = similarity.auto_sign_bits(n_base, similarity.KNN_DESCENT_CELL_SIZE)
     return emb, base, batch, nf, base_nf, batch_nf, b_ringe, b_entries, dbits
 
 
@@ -7910,7 +7620,7 @@ _GMS_CHAIN_CTES = f"""ebase as (select vec_id, embedding from embeddings
                   where vec_id % {GMS_DEL_MOD} <> {GMS_DEL_RES})"""
 
 
-register_extra(
+register(
     "graph_maintained_search",
     q_graph_maintained_search,
     f"""with {_GMS_CHAIN_CTES},
@@ -7988,7 +7698,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("vec_id")
 
 
-register_extra(
+register(
     "label_propagation",
     q_label_propagation,
     f"""with {_DESCENT_GRAPH_CTES},
@@ -8064,7 +7774,7 @@ def q_prototype_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("vec_id")
 
 
-register_extra(
+register(
     "prototype_prune",
     q_prototype_prune,
     f"""with {_LLOYD_TRAIN_ASSIGN_CTES},
@@ -8151,7 +7861,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "step")
 
 
-register_extra(
+register(
     "mmr_rerank",
     q_mmr_rerank,
     f"""with e as (select vec_id, embedding::DOUBLE[] as v from embeddings),
@@ -8215,7 +7925,7 @@ def q_mmr_rerank_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "step")
 
 
-register_extra(
+register(
     "mmr_rerank_ivf",
     q_mmr_rerank_ivf,
     f"""with {_IVF_CAND_CTES},
@@ -8369,7 +8079,7 @@ def _retrieval_eval_oracle() -> str:
         from wide order by qid"""
 
 
-register_extra("retrieval_eval", q_retrieval_eval, _retrieval_eval_oracle())
+register("retrieval_eval", q_retrieval_eval, _retrieval_eval_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -8403,7 +8113,7 @@ def q_bm25_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "step")
 
 
-register_extra(
+register(
     "bm25_mmr",
     q_bm25_mmr,
     f"""with {_HASHED_EMB_CTES},
@@ -8443,18 +8153,6 @@ register_extra(
           union all select * from s3)
         order by qid, step""",
 )
-
-
-# late-r7 window rotation #2: promote the two new hash-oracled
-# training/graph loops (Lloyd-trained IVF, NN-descent) so the round's
-# flagship additions are driver-attested, not just sweep-green.
-# Demoted veterans: mutual_knn (driver-green r4/r5/r6; its CTE chain
-# stays window-attested through knn_triangles and the new knn_descent)
-# and ivf_pq_topk (driver-green r4/r5/r6; the window keeps the
-# scale-path compositions ivf_pq_residual_topk + pq_topk_rerank).
-# The window stays exactly 50.
-_promote("ann_ivf_lloyd", "knn_descent")
-_demote("mutual_knn", "ivf_pq_topk")
 
 
 # ---------------------------------------------------------------------------
@@ -8530,7 +8228,7 @@ def _pca_oracle() -> str:
         order by u.j"""
 
 
-register_extra("pca_power", q_pca_power, _pca_oracle())
+register("pca_power", q_pca_power, _pca_oracle())
 
 
 PCA_OUTLIER_K = 10
@@ -8590,7 +8288,7 @@ def _pca_outliers_oracle() -> str:
         order by vec_id"""
 
 
-register_extra("pca_outliers", q_pca_outliers, _pca_outliers_oracle())
+register("pca_outliers", q_pca_outliers, _pca_outliers_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -8731,7 +8429,7 @@ def q_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unigram.unigram_train(docs).orderBy("piece")
 
 
-register_extra(
+register(
     "unigram_lm",
     q_unigram_lm,
     f"""with {_uni_train_ctes()}
@@ -8754,7 +8452,7 @@ def q_unigram_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unigram.unigram_fertility(docs, voc).orderBy("doc_id")
 
 
-register_extra(
+register(
     "unigram_fertility",
     q_unigram_fertility,
     rf"""with {_uni_train_ctes()},
@@ -8948,90 +8646,7 @@ def _tokenizer_compare_oracle() -> str:
     )
 
 
-register_extra(
-    "tokenizer_compare", q_tokenizer_compare, _tokenizer_compare_oracle()
-)
-
-
-# late-r7 window rotation #3: driver-attest the curation + rerank
-# additions (prototype_prune, mmr_rerank — both MATCH at both SFs
-# under both comparators locally). Demoted veterans, driver-green
-# r4/r5/r6: dsir_select (the importance family keeps
-# temperature_mixture / curriculum_interleave / mixture_epochs
-# in-window) and train_classifier (its grading twin classifier_eval
-# stays, and the training loop is pinned by the hash-exact oracle in
-# the sweep). The window stays exactly 50.
-_promote("prototype_prune", "mmr_rerank")
-_demote("dsir_select", "train_classifier")
-
-# round-8 driver-window rotation (VERDICT r7 next-round #1): free the
-# two structurally-no-oracle slots — ann_ivf_trained / compression_ratio
-# can only ever produce `err: no_oracle` driver rows (MLlib float
-# training and zlib are not SQL-expressible; both stay pytest-attested
-# extras) — and promote the never-driver-attested r7 extras
-# (retrieval_eval, bm25_mmr, pca_power — sweep-MATCH at both SFs under
-# both comparators since r7) plus the r8 additions (mmr_rerank_ivf,
-# pca_outliers, graph_search_topk, unigram_lm). The five demoted
-# veterans are all driver-green 3-5 consecutive rounds with their
-# families still represented in-window: semantic_dedup (4 rounds;
-# text_semantic_dedup + semantic_dedup_pruned stay), curriculum_
-# interleave (4; temperature_mixture/mixture_epochs/curation_pipeline
-# stay), embedding_clusters (4; knn_triangles + knn_descent +
-# graph_search_topk carry the graph family), quality_buckets (3;
-# length_percentiles/lang_top_tokens/ngram_lang stay), bpe_merges (3;
-# bpe_fertility stays and its oracle replays the full train chain).
-# The window stays exactly 50, now with zero rows-only entries —
-# every declared query is hash-checkable.
-_promote(
-    "retrieval_eval",
-    "bm25_mmr",
-    "pca_power",
-    "mmr_rerank_ivf",
-    "pca_outliers",
-    "graph_search_topk",
-    "unigram_lm",
-)
-_demote(
-    "ann_ivf_trained",
-    "compression_ratio",
-    "semantic_dedup",
-    "curriculum_interleave",
-    "embedding_clusters",
-    "quality_buckets",
-    "bpe_merges",
-)
-
-# round-9 driver-window rotation (VERDICT r8 next-round #1 + #2 + #6):
-# retire the rotation debt — the three r8 extras that were never
-# driver-attested (label_propagation, unigram_fertility, text_stats_r1
-# — all sweep-MATCH at both SFs under both comparators since r8) —
-# and declare the three r9 additions (ivf_append, graph_insert,
-# tokenizer_compare). The six demoted veterans are driver-green 3-5
-# consecutive rounds with their families still represented in-window:
-# classifier_eval (4 rounds; lm_doc_score carries training),
-# text_ann_ivf (4; ann_ivf_lloyd + ivf_append + the quantized ladder
-# carry IVF), text_semantic_dedup (4; semantic_dedup_pruned stays),
-# bpe_fertility (3; tokenizer_compare replays the full BPE train+apply
-# chain in its oracle, unigram_lm/unigram_fertility carry the family),
-# containment_pairs (3; fuzzy_pairs + simhash_pairs carry pair-gen),
-# events_ewma (3; events_sliding + interval_overlap carry temporal).
-# The window stays exactly 50, all hash-checkable.
-_promote(
-    "label_propagation",
-    "unigram_fertility",
-    "text_stats_r1",
-    "ivf_append",
-    "graph_insert",
-    "tokenizer_compare",
-)
-_demote(
-    "classifier_eval",
-    "text_ann_ivf",
-    "text_semantic_dedup",
-    "bpe_fertility",
-    "containment_pairs",
-    "events_ewma",
-)
+register("tokenizer_compare", q_tokenizer_compare, _tokenizer_compare_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -9094,7 +8709,7 @@ def q_incremental_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("lang")
 
 
-register_extra(
+register(
     "incremental_snapshot",
     q_incremental_snapshot,
     rf"""with base as (select * from documents
@@ -9181,32 +8796,6 @@ register_extra(
 )
 
 
-# round-10 driver-window rotation (VERDICT r9 next-round #1 + #2 + #5):
-# retire the LAST rotation debt — the two r9-late extras never
-# driver-attested (graph_delete, ivf_retrain_delta — both sweep-MATCH
-# at both SFs under both comparators, judge-re-verified in the r9
-# session) — and declare the two r10 compositions
-# (graph_maintained_search: the post-CRUD search a production graph
-# index serves; incremental_snapshot: the nightly ingest report).
-# After this rotation every hash-oracled query in the repo has had a
-# green driver row in some round. Two veterans demote here and two in
-# plans/relational.py (see its rotation note); families stay
-# represented: hybrid_rrf (4 driver rounds; hybrid_rrf_ivf — the
-# declared scale path of the SAME combiner — stays), lang_top_tokens
-# (4 rounds; ngram_lang + length_percentiles carry lang-ID/text
-# stats). The window stays exactly 50, all hash-checkable.
-_promote(
-    "graph_delete",
-    "ivf_retrain_delta",
-    "graph_maintained_search",
-    "incremental_snapshot",
-)
-_demote(
-    "hybrid_rrf",
-    "lang_top_tokens",
-)
-
-
 # ---------------------------------------------------------------------------
 # late-r10 addition: IVF CRUD-then-search — ivf_maintained_topk, the
 # IVF analogue of graph_maintained_search (append + delete applied
@@ -9215,7 +8804,6 @@ _demote(
 # (postings rows are independent — one anti-join), so maintained
 # postings are EXACTLY the rebuild assignment of the alive corpus
 # against the same frozen codebook (pytest-pinned row identity).
-# Registered as an extra (rotation policy: the r10 window is full).
 
 IMS_DEL_MOD = 13  # coprime to IAP_MOD=8: the deleted slice hits both
 IMS_DEL_RES = 4   # base postings and just-appended batch postings.
@@ -9248,7 +8836,7 @@ def q_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "rnk")
 
 
-register_extra(
+register(
     "ivf_maintained_topk",
     q_ivf_maintained,
     f"""with {_LLOYD_APPEND_CTES},
@@ -9364,7 +8952,7 @@ def q_graph_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("src", "rnk")
 
 
-register_extra(
+register(
     "graph_refresh",
     q_graph_refresh,
     f"""with {_GMS_CHAIN_CTES},
@@ -9423,7 +9011,7 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "compaction_plan",
     q_compaction_plan,
     f"""with man as (
@@ -9451,35 +9039,6 @@ register_extra(
         from ass
         group by 1, 2, 3
         order by lang, action, bin_id""",
-)
-
-
-# ---------------------------------------------------------------------------
-# late-r10 rotation amendment: graph_refresh and compaction_plan landed
-# AFTER the round's main rotation — promote them immediately so they
-# are never rotation debt (the r9 verdict's What's-missing #2 pattern:
-# an extra that exists but has no driver row). Two more long-green
-# veterans cede slots: simhash_pairs (4 green rounds; the dedup family
-# stays anchored by fuzzy_pairs, semantic_dedup_pruned and
-# cluster_canonical) and knn_triangles (4 green rounds; the graph
-# family stays anchored by label_propagation and the five graph_*
-# lifecycle queries).
-
-_promote(
-    "graph_refresh",
-    "compaction_plan",
-    # the only remaining hash-oracled extra with no driver row in ANY
-    # round (it landed mid-r10, after the main rotation): promote it so
-    # the full-attestation invariant — every hash-oracled query has had
-    # a green driver row — holds again after this round's run
-    "ivf_maintained_topk",
-)
-_demote(
-    "simhash_pairs",
-    "knn_triangles",
-    # 4 green rounds; the mixture machinery stays in-window via
-    # mixture_epochs and incremental_snapshot's keep_bp legs
-    "temperature_mixture",
 )
 
 
@@ -9614,7 +9173,7 @@ _GRM_SELECT = f"""select b.qid,
         left join got g on g.qid = b.qid and g.nid = b.nid
         group by b.qid"""
 
-register_extra(
+register(
     "graph_recall_monitor",
     q_graph_recall_monitor,
     f"""with {_GRM_CTES}
@@ -9738,7 +9297,7 @@ def _ivf_monitor_select(p: str = "") -> str:
         group by b.qid"""
 
 
-register_extra(
+register(
     "ivf_recall_monitor",
     q_ivf_recall_monitor,
     f"""with {_LLOYD_APPEND_CTES},
@@ -9746,16 +9305,6 @@ register_extra(
         {_ivf_monitor_select()}
         order by b.qid""",
 )
-
-
-# late additions keep the zero-rotation-debt policy: promoted the same
-# round they land. novelty (4 green rounds) cedes the slot — the text
-# family stays anchored by text_stats_r1, lm_doc_score and the unigram
-# rows; orders_expectations (4) cedes to the IVF gauge (the
-# expectations machinery stays pytest- and sweep-anchored, and the
-# orders table keeps its orders_profile-family extras).
-_promote("graph_recall_monitor", "ivf_recall_monitor")
-_demote("novelty", "orders_expectations")
 
 
 # ---------------------------------------------------------------------------
@@ -9811,7 +9360,7 @@ def q_index_maintenance_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "index_maintenance_policy",
     q_index_maintenance_policy,
     f"""with {_GRM_CTES},
@@ -9859,28 +9408,6 @@ register_extra(
 )
 
 
-# zero-rotation-debt policy: the round's new hash-oracled query enters
-# the driver window the round it lands. graph_search_topk (driver-green
-# r8, sweep-anchored, and its machinery stays windowed through the
-# maintained-search + monitor chains) cedes the slot.
-_promote("index_maintenance_policy")
-_demote("graph_search_topk")
-
-
-# r11 freshness rotation (VERDICT r10 Next-round #6): zero rotation
-# debt stands, so the window re-checks the STALEST green rows instead —
-# asof_join / clean_pack / decontaminate last had a driver row in r3
-# (sweep-green under both comparators every round since). They re-enter
-# against three of the longest-green rows whose families keep an
-# in-window anchor: media_neardup (7 greens; multimodal stays via
-# media_features + the streaming gates' stream≡batch pytests),
-# mixture_epochs (5 greens; the mixture machinery stays windowed via
-# incremental_snapshot's keep_bp legs), length_percentiles (5 greens;
-# text stats stay via text_stats_r1 + lm_doc_score).
-_promote("asof_join", "clean_pack", "decontaminate")
-_demote("media_neardup", "mixture_epochs", "length_percentiles")
-
-
 # ---------------------------------------------------------------------------
 # leakage_safe_split — the split assignment that cannot leak near-dups
 # across train/eval: the shared hash-bernoulli split expression applied
@@ -9914,7 +9441,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("doc_id")
 
 
-register_extra(
+register(
     "leakage_safe_split",
     q_leakage_safe_split,
     f"""with recursive {_SIG_CTE},
@@ -9950,14 +9477,6 @@ register_extra(
        from bkt order by doc_id""",
 )
 
-# zero-rotation-debt: windowed the round it lands; group_sample (5
-# green rounds r6-r10; the hash-bernoulli sampling machinery it checks
-# stays sweep-green under both comparators every round and shares its
-# split/sample expressions with this very query, which now carries
-# them in-window) cedes the slot.
-_promote("leakage_safe_split")
-_demote("group_sample")
-
 
 # ---------------------------------------------------------------------------
 # media_frame_sample — the video-pipeline frame-sampling plumbing
@@ -9986,7 +9505,7 @@ def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "frame_idx")
 
 
-register_extra(
+register(
     "media_frame_sample",
     q_media_frame_sample,
     f"""with m as (select doc_id,
@@ -10004,12 +9523,6 @@ register_extra(
                 as n_bytes
        from f order by doc_id, frame_idx""",
 )
-
-# zero-rotation-debt: windowed the round it lands; ngram_lang (5 green
-# rounds r6-r10; lang-ID stays in-window through text_stats' lang_guess
-# feature and the curation_pipeline row) cedes the slot.
-_promote("media_frame_sample")
-_demote("ngram_lang")
 
 
 # ---------------------------------------------------------------------------
@@ -10125,7 +9638,7 @@ def _pa_decision_sql(bp: str) -> str:
     )
 
 
-register_extra(
+register(
     "policy_applied",
     q_policy_applied,
     f"""with {_lloyd_append_ctes("b")},
@@ -10237,7 +9750,7 @@ def q_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-register_extra(
+register(
     "video_neardup",
     q_video_neardup,
     f"""with m as (
@@ -10431,7 +9944,7 @@ def q_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-register_extra(
+register(
     "split_drift",
     q_split_drift,
     f"""with recursive {_split_chain_sql(
@@ -10474,44 +9987,6 @@ register_extra(
 )
 
 
-# r12 rotation (zero-rotation-debt + VERDICT r11 next-round #7): the
-# round's three new hash-oracled rows enter the driver window the round
-# they land, and the next-stalest greens re-enter — range_join (last
-# driver row r3), events_pivot / events_unpivot (last driver row r6).
-# Six of the longest-consecutively-green rows cede, each with its
-# family still anchored in-window:
-#   fuzzy_pairs (6 greens; the LSH pair chain stays via
-#     leakage_safe_split AND the new split_drift, which replays it for
-#     two corpus versions),
-#   cluster_canonical (6; the component closure stays via
-#     leakage_safe_split + split_drift),
-#   events_sliding (6; the events family re-anchors on the promoted
-#     events_pivot/events_unpivot + interval_overlap),
-#   global_shuffle (6; the scale/layout family keeps asof_join +
-#     compaction_plan + the promoted range_join),
-#   hybrid_rrf_ivf (6; retrieval stays via bm25_mmr + retrieval_eval +
-#     mmr_rerank_ivf),
-#   lm_doc_score (6; text stays via text_stats_r1 + curation_pipeline +
-#     unigram_lm/unigram_fertility).
-# All demoted rows remain dual-comparator sweep-checked every round.
-_promote(
-    "policy_applied",
-    "video_neardup",
-    "split_drift",
-    "range_join",
-    "events_pivot",
-    "events_unpivot",
-)
-_demote(
-    "fuzzy_pairs",
-    "cluster_canonical",
-    "events_sliding",
-    "global_shuffle",
-    "hybrid_rrf_ivf",
-    "lm_doc_score",
-)
-
-
 # ---------------------------------------------------------------------------
 # embedding_drift — the distribution-shift gauge next to the recall
 # monitors (r12, monitoring family): a new encoder checkpoint, a
@@ -10540,7 +10015,7 @@ def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_drift(base, emb, quant=ED_QUANT)
 
 
-register_extra(
+register(
     "embedding_drift",
     q_embedding_drift,
     f"""with e as (select vec_id, embedding::DOUBLE[] as v
@@ -10573,16 +10048,6 @@ register_extra(
        from om o join nm n on o.dim = n.dim
        order by o.dim""",
 )
-
-
-# zero-rotation-debt: the late r12 addition enters the window the
-# round it lands (pinned by tests/test_bench_contract.py::
-# test_driver_window_invariants — a hash-oracled extra with no driver
-# row is rotation debt by definition). interval_overlap (6 consecutive
-# greens; the temporal family stays anchored by asof_join, windowed
-# r11, and the just-promoted range_join) cedes the slot.
-_promote("embedding_drift")
-_demote("interval_overlap")
 
 
 # ---------------------------------------------------------------------------
@@ -10764,7 +10229,7 @@ def _gpa_decision_sql(bp: str) -> str:
     )
 
 
-register_extra(
+register(
     "graph_policy_applied",
     q_graph_policy_applied,
     f"""with {_GMS_CHAIN_CTES},
@@ -11043,7 +10508,7 @@ def _dpa_out_sql(
         from dread cross join zdec z"""
 
 
-register_extra(
+register(
     "drift_policy_applied",
     q_drift_policy_applied,
     f"""with {_drift_read_ctes()},
@@ -11158,7 +10623,7 @@ def q_graph_drift_applied(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register_extra(
+register(
     "graph_drift_applied",
     q_graph_drift_applied,
     f"""with {_drift_read_ctes()},
@@ -11345,7 +10810,7 @@ def q_snapshot_upgrade(spark: SparkSession, sf_dir: str) -> DataFrame:
     return srows.unionByName(crows).orderBy("step", "metric")
 
 
-register_extra(
+register(
     "snapshot_upgrade",
     q_snapshot_upgrade,
     f"""with recursive {_split_chain_sql(
@@ -11433,36 +10898,4 @@ register_extra(
           from zdec)
         select step, stage, metric, value
         from outp order by step, metric""",
-)
-
-
-# r13 rotation (zero-rotation-debt): the round's four new hash-oracled
-# controller/runbook rows enter the driver window the round they land.
-# Four long-green veterans cede, each with its family still anchored
-# in-window — and each one's MACHINERY now replayed INSIDE a promoted
-# oracle, so the coverage is strictly deeper, not shifted:
-#   graph_insert / graph_delete (green since r9; the full
-#     insert+delete chains are the literal prelude of the
-#     graph_policy_applied AND graph_drift_applied oracles, and the
-#     graph family keeps graph_maintained_search, graph_recall_monitor,
-#     graph_refresh, knn_descent in-window),
-#   ivf_append (green since r9; the frozen-codebook append chain is
-#     the _lloyd_append_ctes prelude of drift_policy_applied and
-#     snapshot_upgrade; the IVF family keeps ivf_maintained_topk,
-#     ivf_recall_monitor, ivf_retrain_delta, policy_applied),
-#   sq8_codes (green since r8; the quantization family keeps
-#     ivf_sq8_topk — which replays the encode — plus bq_codes,
-#     ivf_bq_topk, ivf_pq_residual_topk, pq_topk_rerank).
-# All demoted rows remain dual-comparator sweep-checked every round.
-_promote(
-    "graph_policy_applied",
-    "drift_policy_applied",
-    "graph_drift_applied",
-    "snapshot_upgrade",
-)
-_demote(
-    "graph_insert",
-    "graph_delete",
-    "ivf_append",
-    "sq8_codes",
 )

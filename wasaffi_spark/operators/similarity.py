@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 SIGN_BITS = 8  # coarse cell = sign pattern of the first 8 dims
+# knn_descent's default expected cell occupancy for its auto sign bits
+KNN_DESCENT_CELL_SIZE = 32
 
 
 def auto_sign_bits(n_rows: int, target_cell_size: int = 256) -> int:
@@ -3242,7 +3244,7 @@ def knn_descent(
     id_col: str = "vec_id",
     bits: int | None = None,
     max_bucket_size: int | None = None,
-    target_cell_size: int = 32,
+    target_cell_size: int = KNN_DESCENT_CELL_SIZE,
     max_reverse: int | None = 16,
     ring: int = 2,
     seed: str = IVF_SEED,

@@ -234,22 +234,7 @@ def _approx_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _approx_aggs.__name__ = "q_approx_aggs"
 QUERIES["approx_aggs"] = _approx_aggs
 
-# §2C row: EXPLAIN surface — smoke-only (returns the plan as text), so a
-# driver window slot adds nothing over the local sweep: registered in the
-# extras channel (round-3 demotion; pytest + tools/oracle_check.py keep
-# running it).
-EXTRA_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-EXTRA_ORACLE: dict[str, str] = {}
-
-
-def demote(*names: str) -> None:
-    """Move driver-window queries to the extras channel (local sweep +
-    pytest keep checking them; the driver's bounded window frees a slot).
-    Oracles travel with the query so the sweep stays a hash check."""
-    for n in names:
-        EXTRA_QUERIES[n] = QUERIES.pop(n)
-        if n in ORACLE:
-            EXTRA_ORACLE[n] = ORACLE.pop(n)
+# §2C row: EXPLAIN surface — smoke-only (returns the plan as text).
 
 
 def _explain_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,7 +243,7 @@ def _explain_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _explain_smoke.__name__ = "q_explain_smoke"
-EXTRA_QUERIES["explain_smoke"] = _explain_smoke
+QUERIES["explain_smoke"] = _explain_smoke
 
 # -- window functions ----------------------------------------------------------
 # §2C rows: ranking (ROW_NUMBER/RANK), offset (LAG), and aggregate-over-
@@ -550,49 +535,4 @@ ORACLE["udf_types"] = (
                                           embedding::DOUBLE[])), 6) as l2,
               cast(length(upper(cast(vec_id as varchar))) as bigint) as idlen
        from embeddings order by vec_id limit 50"""
-)
-
-
-# round-4 driver-window rotation (see operators/catalog.py tail): these
-# relational rows have been hash-green in every round since r1 — they
-# move to the extras channel (sweep + pytest keep them green) so the
-# driver window can take never-driver-checked operators instead.
-demote(
-    "agg_stats",
-    "histogram_having_case",
-    "scalar_fns",
-    "datetime_fns",
-    "reshape_setops",
-    "json_complex",
-    "approx_aggs",
-)
-
-
-# round-6 driver-window rotation (VERDICT r5 next-round #1): these five
-# relational rows have been hash-green in every driver window since r1
-# — they move to the extras channel (sweep + pytest keep them green) so
-# the driver window can absorb the never-driver-checked backlog. The
-# UDF-parity rows (udf_pow/udf_types) and subqueries_cte stay as the
-# §2A/§2C anchors.
-demote(
-    "filter_project",
-    "join_collect_aggs",
-    "outer_join_topk",
-    "agg_pricing_sets",
-    "window_fns",
-)
-
-
-# round-10 driver-window rotation (the relational half; see
-# operators/catalog.py for the promotions): udf_pow has been
-# driver-green in ALL NINE windows and subqueries_cte in eight — the
-# two longest-tenured rows in the repo. §2A UDF parity stays anchored
-# in-window by udf_types (the wider-signature row) AND by the driver's
-# per-round entry() smoke check, whose flagship plan executes the
-# reference's wasm guest against its golden values every round;
-# subqueries/CTE shapes remain exercised inside a dozen catalog
-# oracles. Both stay sweep- and pytest-green as extras.
-demote(
-    "udf_pow",
-    "subqueries_cte",
 )

@@ -113,16 +113,6 @@ def get_function(resolved_path: str, method: str) -> Callable[[list[pa.Array]], 
     return fn
 
 
-def executor_cache_size() -> int:
-    """Visible for tests (≙ cache assertions, lib.rs:344-372)."""
-    return len(_MODULE_CACHE)
-
-
-def clear_executor_cache() -> None:
-    with _CACHE_LOCK:
-        _MODULE_CACHE.clear()
-
-
 def build_pandas_udf(
     module_path: str,
     method: str,
