@@ -2,12 +2,16 @@
 # the Spark build: no compile step, so "all" is test; "wasm"-phase
 # equivalents are the oracle/bench harnesses.
 
-.PHONY: all test oracle bench example pipeline-example maintenance-example nightly-example smoke
+.PHONY: all test test-full oracle bench example pipeline-example maintenance-example nightly-example smoke
 
 all: test
 
 test:
 	python -m pytest tests/ -q
+
+# the full suite, including the `slow` seam pins pytest.ini deselects
+test-full:
+	python -m pytest tests/ -q -m "slow or not slow"
 
 # replicate the driver's t2 correctness gate locally (DuckDB oracle)
 oracle:

@@ -67,7 +67,7 @@ def split(emb):
 
 
 @pytest.mark.slow
-def test_ivf_postings_topk_equals_maintained(emb, split):
+def test_ivf_postings_topk_equals_maintained(split):
     """The shared-components probe tail returns exactly the rows the
     all-in-one maintained search returns (the q_policy_applied r13
     restructure's equivalence)."""
@@ -81,13 +81,8 @@ def test_ivf_postings_topk_equals_maintained(emb, split):
         base, cents, LLOYD_CELLS
     ).unionByName(similarity.ivf_append(batch, cents, LLOYD_CELLS))
     postings = similarity.ivf_delete(dele, postings)
-    d = dele.withColumnRenamed("vec_id", "_did")
-    alive = emb.select("vec_id", "embedding").join(
-        d, F.col("vec_id") == F.col("_did"), "left_anti"
-    )
     shared = similarity.ivf_postings_topk(
-        queries, cents, postings, alive, k=ANN_K, n_cells=LLOYD_CELLS,
-        n_probe=2,
+        queries, cents, postings, k=ANN_K, n_probe=2
     )
     assert _rows(shared) == _rows(whole)
 

@@ -9615,8 +9615,7 @@ def q_policy_applied(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def gauge(np_: int) -> DataFrame:
         got = similarity.ivf_postings_topk(
-            queries, cents, postings, alive, k=ANN_K,
-            n_cells=LLOYD_CELLS, n_probe=np_,
+            queries, cents, postings, k=ANN_K, n_probe=np_
         )
         return similarity.recall_at_k(got, truth).select(
             "qid", "hits", F.lit(ANN_K).cast("bigint").alias("k")

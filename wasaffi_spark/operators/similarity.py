@@ -14,6 +14,20 @@ Beyond-reference extensions (SURVEY §7.6):
   centroids at production scale without touching the probe join.
 - **embedding near-dup pairs** — cosine ≥ threshold within cells.
 
+The flat, IVF and quantized top-k variants are compositions of three
+stages. A **probe source** pairs each query with its candidates: the
+whole corpus, a filter slice or sign-LSH cell, or IVF cells routed by
+:func:`_ivf_probes` — the exact-cosine IVF variants (hashed, Lloyd,
+append, maintained, retrained) differ only in how they build the
+``(cents, postings)`` they hand to :func:`ivf_postings_topk`. A
+**score kernel** rates each pair: :func:`_cosine_prenorm`/``cosine``,
+the PQ ADC sum (:func:`_pq_codebook`, :func:`_pq_codes`,
+:func:`_adc_tables`, :func:`_adc_dist`), the SQ8 inner product
+(:func:`_sq8_grid`, :func:`_sq8_ip`) or the BQ :func:`_hamming`
+distance. :func:`_ranked_shortlist` then ranks and cuts per query
+(orders :func:`_cos_order`, :func:`_sq8_order`, :func:`_bq_order`)
+and, with ``rerank=``, refines via :func:`_exact_rerank`.
+
 Everything is built-in column expressions; the dot product folds in
 index order, so Spark and DuckDB produce bit-identical doubles before
 the defensive rounding.
@@ -326,14 +340,7 @@ def brute_force_topk(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("nid").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nid", "cos_sim", "rank")
-    )
+    return _ranked_shortlist(scored, _cos_order(), ["qid", "nid", "cos_sim"], k)
 
 
 def filtered_topk(
@@ -394,14 +401,7 @@ def filtered_topk(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("nid").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nid", "cos_sim", "rank")
-    )
+    return _ranked_shortlist(scored, _cos_order(), ["qid", "nid", "cos_sim"], k)
 
 
 def bucketed_topk(
@@ -455,14 +455,7 @@ def bucketed_topk(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("nid").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nid", "cos_sim", "rank")
-    )
+    return _ranked_shortlist(scored, _cos_order(), ["qid", "nid", "cos_sim"], k)
 
 
 def ivf_topk(
@@ -530,12 +523,7 @@ def ivf_topk(
             F.round(cosine(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("nid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nid", "cos_sim", "rank")
-    )
+    return _ranked_shortlist(scored, _cos_order(), ["qid", "nid", "cos_sim"], k)
 
 
 def neardup_pairs(
@@ -910,6 +898,51 @@ PQ_K = 16
 PQ_QUANT = 1024
 
 
+def _pq_codebook(
+    corpus: DataFrame, k: int, vec_col: str, id_col: str, seed: str
+) -> DataFrame:
+    """The PQ codebook ``(sv, rank)``: the ``k`` hash-sampled seed
+    vectors of :func:`hashed_centroids`, renamed for the subspace
+    kernels (``rank`` = hash-order rank = codeword id)."""
+    return hashed_centroids(corpus, k, vec_col, id_col, seed).select(
+        F.col("cv").alias("sv"), F.col("cell").alias("rank")
+    )
+
+
+def _pq_codes(m: int, k: int) -> list:
+    """Per-subspace code aggregates over ``(_d{j}, rank)`` pair
+    columns: ``c{j}`` = the packed-min argmin of :func:`pq_encode`."""
+    return [
+        (F.min(F.col(f"_d{j}") * k + F.col("rank")) % k)
+        .cast("int")
+        .alias(f"c{j}")
+        for j in range(m)
+    ]
+
+
+def _adc_tables(m: int) -> list:
+    """Per-query ADC lookup aggregates over ``_d{j}`` / ``rank`` pair
+    columns: the rank-ordered array ``_t{j}`` with ``_t{j}[rank+1].d``
+    = the query's distance to codeword ``rank`` in subspace ``j``."""
+    return [
+        F.array_sort(
+            F.collect_list(F.struct(F.col("rank"), F.col(f"_d{j}").alias("d")))
+        ).alias(f"_t{j}")
+        for j in range(m)
+    ]
+
+
+def _adc_dist(m: int) -> Column:
+    """The ADC distance of a code row ``c0..c{m-1}`` against the
+    query's :func:`_adc_tables`: m ``element_at`` lookups and a sum,
+    never a d-dim float op."""
+    adist = None
+    for j in range(m):
+        term = F.element_at(F.col(f"_t{j}"), F.col(f"c{j}") + 1)["d"]
+        adist = term if adist is None else adist + term
+    return adist
+
+
 def pq_encode(
     corpus: DataFrame,
     dim: int = 64,
@@ -945,36 +978,16 @@ def pq_encode(
     vector.
     """
     sub = dim // m
-    h = F.md5(F.concat(F.lit(seed), F.col(id_col).cast("string")))
-    from pyspark.sql.window import Window
-
-    seeds = (
-        corpus.select(F.col(vec_col).alias("sv"), h.alias("_h"), F.col(id_col).alias("_sid"))
-        .orderBy("_h", "_sid")
-        .limit(k)
-        .withColumn(
-            "rank",
-            F.row_number().over(Window.orderBy("_h", "_sid")) - 1,
-        )
-        .select("sv", "rank")
-    )
-
-    def qdist(j: int):
-        return _pq_grid_dist(vec_col, "sv", j, sub, quant)
-
+    seeds = _pq_codebook(corpus, k, vec_col, id_col, seed)
     pairs = corpus.select(id_col, vec_col).crossJoin(F.broadcast(seeds)).select(
         id_col,
         "rank",
-        *[qdist(j).alias(f"_d{j}") for j in range(m)],
-    )
-    return pairs.groupBy(id_col).agg(
         *[
-            (F.min(F.col(f"_d{j}") * k + F.col("rank")) % k)
-            .cast("int")
-            .alias(f"c{j}")
+            _pq_grid_dist(vec_col, "sv", j, sub, quant).alias(f"_d{j}")
             for j in range(m)
-        ]
+        ],
     )
+    return pairs.groupBy(id_col).agg(*_pq_codes(m, k))
 
 
 IVF_SEED = "ivf-v1"
@@ -1060,10 +1073,13 @@ def _ivf_probes(
     assigned: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared hashed-IVF routing used by every composed index
-    (:func:`ivf_topk_hashed`, :func:`ivf_sq8_topk`, :func:`ivf_bq_topk`,
-    :func:`filtered_ivf_topk`) so the probe-order tiebreak contract
-    (grid L2 asc, cell asc) lives in exactly one place. ``q`` must
-    carry ``qid`` and ``qvec_col``; ``carry`` names the query-side
+    (:func:`ivf_postings_topk` — and through it the hashed, Lloyd,
+    append, maintained and retrained exact-cosine variants —
+    :func:`ivf_sq8_topk`, :func:`ivf_bq_topk`, :func:`filtered_ivf_topk`,
+    :func:`ivf_pq_residual_topk` and :func:`ivf_candidates`) so the
+    probe-order tiebreak contract (grid L2 asc, cell asc) lives in
+    exactly one place. ``q`` must carry ``qid`` and ``qvec_col``;
+    ``carry`` names the query-side
     columns to keep on the probe frame (the scoring payload: raw
     vector, SQ8 micro-grid ints, BQ words); ``corpus_carry`` names
     corpus columns to keep on the assignment (e.g. a filter
@@ -1101,17 +1117,24 @@ def _ranked_shortlist(
     order: list,
     out_cols: list,
     k: int,
-    rerank: int | None,
-    queries: DataFrame,
-    corpus: DataFrame,
-    vec_col: str,
-    id_col: str,
+    rerank: int | None = None,
+    queries: DataFrame | None = None,
+    corpus: DataFrame | None = None,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
 ) -> DataFrame:
-    """Shared per-query shortlist tail of the quantized indexes: rank
+    """The one per-query rank-and-cut of the top-k family: rank
     ``scored`` by ``order`` within each qid, keep ``rerank or k`` rows,
-    and (with ``rerank``) refine via :func:`_exact_rerank` — one
-    definition so the flat and IVF-composed variants of each rung can
-    never drift in their tiebreak/rerank contract."""
+    and (with ``rerank``, which needs ``queries``/``corpus``) refine
+    via :func:`_exact_rerank` — one definition so no flat, filtered,
+    bucketed, IVF or quantized variant can drift in its
+    tiebreak/rerank contract. Callers: :func:`brute_force_topk`,
+    :func:`filtered_topk`, :func:`bucketed_topk`, :func:`ivf_topk`,
+    :func:`ivf_postings_topk` (hence every exact-cosine hashed-IVF
+    variant), :func:`filtered_ivf_topk`, :func:`_exact_rerank`,
+    :func:`pq_topk`, :func:`sq8_topk`, :func:`bq_topk`,
+    :func:`ivf_sq8_topk`, :func:`ivf_bq_topk`, :func:`ivf_pq_topk`,
+    :func:`ivf_pq_residual_topk` and :func:`hard_negative_topk`."""
     w = Window.partitionBy("qid").orderBy(*order)
     shortlist = (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1161,33 +1184,12 @@ def ivf_topk_hashed(
     broadcasts the (tiny) query×probe frame so assigned corpus vectors
     never shuffle for search.
     """
-    q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-    assigned, probes = _ivf_probes(
-        q, corpus, n_cells, n_probe, dim, quant, vec_col, id_col, seed
+    cents = hashed_centroids(corpus, n_cells, vec_col, id_col, seed)
+    postings = ivf_assign_hashed(
+        corpus, cents, n_cells, dim, quant, vec_col, id_col
     )
-    c = assigned.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"), "cell"
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(c, ["cell"])
-        .where(F.col("qid") != F.col("nid"))
-        .select(
-            "qid",
-            "nid",
-            F.round(cosine(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
-        )
-    )
-    return _ranked_shortlist(
-        scored,
-        [F.col("cos_sim").desc(), F.col("nid").asc()],
-        ["qid", "nid", "cos_sim"],
-        k,
-        None,
-        queries,
-        corpus,
-        vec_col,
-        id_col,
+    return ivf_postings_topk(
+        queries, cents, postings, k, n_probe, dim, quant, vec_col, id_col
     )
 
 
@@ -1327,8 +1329,8 @@ def ivf_topk_lloyd(
 ) -> DataFrame:
     """IVF ANN with the TRAINED-yet-hash-oracled coarse quantizer
     (:func:`lloyd_centroids`): the same probe-join plan as
-    :func:`ivf_topk_hashed` — cell routing via :func:`_ivf_probes`,
-    exact cosine re-score, :func:`_ranked_shortlist` tail — but cells
+    :func:`ivf_topk_hashed` — both return :func:`ivf_postings_topk`
+    over their codebook and postings — but cells
     are ``iters`` Lloyd rounds over the integer grid instead of raw
     hash-sampled seeds, so the quantizer adapts to the data
     distribution (the property :func:`ivf_topk`'s MLlib KMeans buys)
@@ -1342,34 +1344,11 @@ def ivf_topk_lloyd(
     cents = lloyd_centroids(
         corpus, n_cells, iters, dim, quant, vec_col, id_col, seed
     )
-    q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-    assigned, probes = _ivf_probes(
-        q, corpus, n_cells, n_probe, dim, quant, vec_col, id_col, seed,
-        cents=cents,
+    postings = ivf_assign_hashed(
+        corpus, cents, n_cells, dim, quant, vec_col, id_col
     )
-    c = assigned.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"), "cell"
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(c, ["cell"])
-        .where(F.col("qid") != F.col("nid"))
-        .select(
-            "qid",
-            "nid",
-            F.round(cosine(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
-        )
-    )
-    return _ranked_shortlist(
-        scored,
-        [F.col("cos_sim").desc(), F.col("nid").asc()],
-        ["qid", "nid", "cos_sim"],
-        k,
-        None,
-        queries,
-        corpus,
-        vec_col,
-        id_col,
+    return ivf_postings_topk(
+        queries, cents, postings, k, n_probe, dim, quant, vec_col, id_col
     )
 
 
@@ -1423,8 +1402,8 @@ def ivf_append_topk(
     codebook is trained on ``base`` only and frozen, ``base`` postings
     come from the build-time assignment, ``batch`` postings from
     :func:`ivf_append` — then the standard probe-join search
-    (:func:`ivf_topk_lloyd`'s exact tail) runs over the UNION of old
-    and appended postings. The declared composed form of the
+    (:func:`ivf_postings_topk`, :func:`ivf_topk_lloyd`'s exact tail)
+    runs over the UNION of old and appended postings. The declared composed form of the
     production insert path: search results over old∪new are identical
     to a full rebuild whose training saw only ``base`` (pinned by
     pytest), and the whole flow — train, both assignments, probes,
@@ -1442,35 +1421,8 @@ def ivf_append_topk(
     ).unionByName(
         ivf_append(batch, cents, n_cells, dim, quant, vec_col, id_col)
     )
-    q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-    corpus = base.unionByName(batch)
-    assigned, probes = _ivf_probes(
-        q, corpus, n_cells, n_probe, dim, quant, vec_col, id_col, seed,
-        cents=cents, assigned=postings,
-    )
-    c = assigned.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"), "cell"
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(c, ["cell"])
-        .where(F.col("qid") != F.col("nid"))
-        .select(
-            "qid",
-            "nid",
-            F.round(cosine(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
-        )
-    )
-    return _ranked_shortlist(
-        scored,
-        [F.col("cos_sim").desc(), F.col("nid").asc()],
-        ["qid", "nid", "cos_sim"],
-        k,
-        None,
-        queries,
-        corpus,
-        vec_col,
-        id_col,
+    return ivf_postings_topk(
+        queries, cents, postings, k, n_probe, dim, quant, vec_col, id_col
     )
 
 
@@ -1531,40 +1483,8 @@ def ivf_maintained_topk(
         ivf_append(batch, cents, n_cells, dim, quant, vec_col, id_col)
     )
     postings = ivf_delete(delete_ids, postings, id_col)
-    d = delete_ids.select(F.col(id_col).alias("_did")).distinct()
-    alive = (
-        base.select(id_col, vec_col)
-        .unionByName(batch.select(id_col, vec_col))
-        .join(d, F.col(id_col) == F.col("_did"), "left_anti")
-    )
-    q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-    assigned, probes = _ivf_probes(
-        q, alive, n_cells, n_probe, dim, quant, vec_col, id_col, seed,
-        cents=cents, assigned=postings,
-    )
-    c = assigned.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"), "cell"
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(c, ["cell"])
-        .where(F.col("qid") != F.col("nid"))
-        .select(
-            "qid",
-            "nid",
-            F.round(cosine(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
-        )
-    )
-    return _ranked_shortlist(
-        scored,
-        [F.col("cos_sim").desc(), F.col("nid").asc()],
-        ["qid", "nid", "cos_sim"],
-        k,
-        None,
-        queries,
-        alive,
-        vec_col,
-        id_col,
+    return ivf_postings_topk(
+        queries, cents, postings, k, n_probe, dim, quant, vec_col, id_col
     )
 
 
@@ -1572,36 +1492,38 @@ def ivf_postings_topk(
     queries: DataFrame,
     cents: DataFrame,
     postings: DataFrame,
-    alive: DataFrame,
     k: int = 3,
-    n_cells: int = 16,
     n_probe: int = 2,
     dim: int = 64,
     quant: int = PQ_QUANT,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    seed: str = IVF_SEED,
 ) -> DataFrame:
-    """The probe-join search tail over PREBUILT index components —
-    exactly the plan :func:`ivf_maintained_topk` executes after its
-    build phase, factored out so a controller that gauges recall more
-    than once (``policy_applied``'s before/after rungs) can train the
-    codebook, build the maintained postings and pin them ONCE, then
-    re-run only this tail per gauge (r13 optimization; the components
-    are deterministic, so gauge rows are identical to the recomputed
-    form — the equivalence the pytest pins).
+    """The exact-cosine probe-join search over PREBUILT index
+    components — the one tail :func:`ivf_topk_hashed`,
+    :func:`ivf_topk_lloyd`, :func:`ivf_append_topk`,
+    :func:`ivf_maintained_topk` and :func:`ivf_retrained_topk` return
+    after building their components. Public so a controller that
+    gauges recall more than once (``policy_applied``'s before/after
+    rungs) can train the codebook, build the maintained postings and
+    pin them ONCE, then re-run only this tail per gauge (r13
+    optimization; the components are deterministic, so gauge rows are
+    identical to the recomputed form — the equivalence the pytest
+    pins).
 
-    ``cents``: the frozen codebook ``(cell, cv)``; ``postings``: the
-    maintained ``(id, vec, cell)`` rows (append + delete applied);
-    ``alive``: the alive corpus the searched ids live in (used only
-    for the shared shortlist tail's signature). Scale: unchanged —
-    candidates ∝ N_alive·n_probe/n_cells per query."""
+    ``cents``: the codebook ``(cell, cv)``; ``postings``: the
+    ``(id, vec, cell)`` rows to search (e.g. append + delete applied).
+    Each query probes its ``n_probe`` nearest cells (:func:`_ivf_probes`),
+    candidates join on cell id, exact cosine re-scores, top-k per query.
+    Scale: candidates ∝ N_postings·n_probe/n_cells per query."""
     q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-    assigned, probes = _ivf_probes(
-        q, alive, n_cells, n_probe, dim, quant, vec_col, id_col, seed,
+    # cents and postings are given, so _ivf_probes builds neither and
+    # needs no corpus, cell count or seed
+    _, probes = _ivf_probes(
+        q, None, None, n_probe, dim, quant, vec_col, id_col, None,
         cents=cents, assigned=postings,
     )
-    c = assigned.select(
+    c = postings.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"), "cell"
     )
     scored = (
@@ -1614,17 +1536,7 @@ def ivf_postings_topk(
             F.round(cosine(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
         )
     )
-    return _ranked_shortlist(
-        scored,
-        [F.col("cos_sim").desc(), F.col("nid").asc()],
-        ["qid", "nid", "cos_sim"],
-        k,
-        None,
-        queries,
-        alive,
-        vec_col,
-        id_col,
-    )
+    return _ranked_shortlist(scored, _cos_order(), ["qid", "nid", "cos_sim"], k)
 
 
 def ivf_retrain_delta(
@@ -1742,38 +1654,8 @@ def ivf_retrained_topk(
         full, new_c, n_cells, dim, quant, vec_col, id_col
     )
     postings = ivf_delete(delete_ids, postings, id_col)
-    d = delete_ids.select(F.col(id_col).alias("_did")).distinct()
-    alive = full.select(id_col, vec_col).join(
-        d, F.col(id_col) == F.col("_did"), "left_anti"
-    )
-    q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-    assigned, probes = _ivf_probes(
-        q, alive, n_cells, n_probe, dim, quant, vec_col, id_col, seed,
-        cents=new_c, assigned=postings,
-    )
-    c = assigned.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"), "cell"
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(c, ["cell"])
-        .where(F.col("qid") != F.col("nid"))
-        .select(
-            "qid",
-            "nid",
-            F.round(cosine(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
-        )
-    )
-    return _ranked_shortlist(
-        scored,
-        [F.col("cos_sim").desc(), F.col("nid").asc()],
-        ["qid", "nid", "cos_sim"],
-        k,
-        None,
-        queries,
-        alive,
-        vec_col,
-        id_col,
+    return ivf_postings_topk(
+        queries, new_c, postings, k, n_probe, dim, quant, vec_col, id_col
     )
 
 
@@ -2184,17 +2066,7 @@ def filtered_ivf_topk(
             ).alias("cos_sim"),
         )
     )
-    return _ranked_shortlist(
-        scored,
-        [F.col("cos_sim").desc(), F.col("nid").asc()],
-        ["qid", "nid", "cos_sim"],
-        k,
-        None,
-        queries,
-        corpus,
-        vec_col,
-        id_col,
-    )
+    return _ranked_shortlist(scored, _cos_order(), ["qid", "nid", "cos_sim"], k)
 
 
 def _exact_rerank(
@@ -2232,14 +2104,7 @@ def _exact_rerank(
             F.round(cosine(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("nid").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nid", "cos_sim", "rank")
-    )
+    return _ranked_shortlist(scored, _cos_order(), ["qid", "nid", "cos_sim"], k)
 
 
 def pq_topk(
@@ -2280,33 +2145,17 @@ def pq_topk(
     collapse inside dense clusters.
     """
     sub = dim // m
-    h = F.md5(F.concat(F.lit(seed), F.col(id_col).cast("string")))
-    seeds = (
-        corpus.select(
-            F.col(vec_col).alias("sv"), h.alias("_h"), F.col(id_col).alias("_sid")
-        )
-        .orderBy("_h", "_sid")
-        .limit(codebook_k)
-        .withColumn("rank", F.row_number().over(Window.orderBy("_h", "_sid")) - 1)
-        .select("sv", "rank")
-    )
-
-    def qdist(j: int):
-        return _pq_grid_dist("qv", "sv", j, sub, quant)
-
+    seeds = _pq_codebook(corpus, codebook_k, vec_col, id_col, seed)
     q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
     pairs = q.crossJoin(F.broadcast(seeds)).select(
-        "qid", "rank", *[qdist(j).alias(f"_d{j}") for j in range(m)]
-    )
-    # rank-ordered lookup array per (query, subspace): table_j[rank+1]
-    tables = pairs.groupBy("qid").agg(
+        "qid",
+        "rank",
         *[
-            F.array_sort(
-                F.collect_list(F.struct(F.col("rank"), F.col(f"_d{j}").alias("d")))
-            ).alias(f"_t{j}")
+            _pq_grid_dist("qv", "sv", j, sub, quant).alias(f"_d{j}")
             for j in range(m)
-        ]
+        ],
     )
+    tables = pairs.groupBy("qid").agg(*_adc_tables(m))
     codes = pq_encode(
         corpus,
         dim=dim,
@@ -2317,23 +2166,13 @@ def pq_topk(
         id_col=id_col,
         seed=seed,
     ).withColumnRenamed(id_col, "nid")
-    adist = None
-    for j in range(m):
-        term = F.element_at(F.col(f"_t{j}"), F.col(f"c{j}") + 1)["d"]
-        adist = term if adist is None else adist + term
-    scored = (
-        codes.join(F.broadcast(tables), F.col("qid") != F.col("nid"))
-        .select("qid", "nid", adist.alias("adist"))
+    scored = codes.join(F.broadcast(tables), F.col("qid") != F.col("nid")).select(
+        "qid", "nid", _adc_dist(m).alias("adist")
     )
-    w = Window.partitionBy("qid").orderBy(F.col("adist").asc(), F.col("nid").asc())
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= (rerank if rerank else k))
-        .select("qid", "nid", "adist", "rank")
+    return _ranked_shortlist(
+        scored, _adc_order(), ["qid", "nid", "adist"], k,
+        rerank, queries, corpus, vec_col, id_col,
     )
-    if rerank:
-        return _exact_rerank(shortlist, queries, corpus, k, vec_col, id_col)
-    return shortlist
 
 
 SQ8_QUERY_QUANT = 1_000_000  # micro-grid for query-side quantization
@@ -2405,12 +2244,21 @@ def sq8_encode(
     )
 
 
-# one definition of each quantized rung's ranking contract, shared by
-# the flat scan and its IVF composition so they can never drift:
-# SQ8 ranks by ip/√code_norm_sq (∝ cosine — the per-vector scale
-# cancels), BQ ascending by hamming; both tiebreak to the lower nid.
+# one definition of each rung's ranking contract, shared by the flat
+# scan and its IVF composition so they can never drift: exact search
+# ranks by cos_sim desc, PQ ascending by ADC distance, SQ8 by
+# ip/√code_norm_sq (∝ cosine — the per-vector scale cancels), BQ
+# ascending by hamming; all tiebreak to the lower nid.
 # (Functions, not module constants: Column construction needs an
 # active SparkContext, which import time doesn't have.)
+def _cos_order() -> list:
+    return [F.col("cos_sim").desc(), F.col("nid").asc()]
+
+
+def _adc_order() -> list:
+    return [F.col("adist").asc(), F.col("nid").asc()]
+
+
 def _sq8_order() -> list:
     return [
         (
@@ -2423,6 +2271,42 @@ def _sq8_order() -> list:
 
 def _bq_order() -> list:
     return [F.col("hamming").asc(), F.col("nid").asc()]
+
+
+def _sq8_grid(v: Column, quant: int) -> Column:
+    """Query-side SQ8 quantization: ``floor(x·quant + 0.5)`` per
+    element, as bigints on the fixed micro-grid."""
+    return F.transform(
+        v,
+        lambda x: F.floor(
+            x.cast("double") * F.lit(quant) + F.lit(0.5)
+        ).cast("bigint"),
+    )
+
+
+def _sq8_ip() -> Column:
+    """The SQ8 score kernel: integer inner product of the query grid
+    ``qq`` with the corpus ``codes`` — one zip-multiply fold."""
+    return F.aggregate(
+        F.zip_with(
+            F.col("qq"), F.col("codes"), lambda a, b: a * b.cast("bigint")
+        ),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+
+
+def _hamming() -> Column:
+    """The BQ score kernel: ``Σ bit_count(qwords xor words)``."""
+    return F.aggregate(
+        F.zip_with(
+            F.col("qwords"),
+            F.col("words"),
+            lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("bigint"),
+        ),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    ).cast("int")
 
 
 def sq8_topk(
@@ -2460,34 +2344,14 @@ def sq8_topk(
         .withColumnRenamed(id_col, "nid")
     )
     q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(
-                x.cast("double") * F.lit(quant) + F.lit(0.5)
-            ).cast("bigint"),
-        ).alias("qq"),
-    )
-    ip = F.aggregate(
-        F.zip_with(
-            F.col("qq"), F.col("codes"), lambda a, b: a * b.cast("bigint")
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
+        F.col(id_col).alias("qid"), _sq8_grid(F.col(vec_col), quant).alias("qq")
     )
     scored = enc.join(F.broadcast(q), F.col("qid") != F.col("nid")).select(
-        "qid", "nid", ip.alias("ip"), "code_norm_sq"
+        "qid", "nid", _sq8_ip().alias("ip"), "code_norm_sq"
     )
     return _ranked_shortlist(
-        scored,
-        _sq8_order(),
-        ["qid", "nid", "ip", "code_norm_sq"],
-        k,
-        rerank,
-        queries,
-        corpus,
-        vec_col,
-        id_col,
+        scored, _sq8_order(), ["qid", "nid", "ip", "code_norm_sq"], k,
+        rerank, queries, corpus, vec_col, id_col,
     )
 
 
@@ -2576,28 +2440,12 @@ def bq_topk(
     q = bq_encode(queries, vec_col, id_col).select(
         F.col(id_col).alias("qid"), F.col("words").alias("qwords")
     )
-    hamming = F.aggregate(
-        F.zip_with(
-            F.col("qwords"),
-            F.col("words"),
-            lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("bigint"),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    ).cast("int")
     scored = enc.join(F.broadcast(q), F.col("qid") != F.col("nid")).select(
-        "qid", "nid", hamming.alias("hamming")
+        "qid", "nid", _hamming().alias("hamming")
     )
     return _ranked_shortlist(
-        scored,
-        _bq_order(),
-        ["qid", "nid", "hamming"],
-        k,
-        rerank,
-        queries,
-        corpus,
-        vec_col,
-        id_col,
+        scored, _bq_order(), ["qid", "nid", "hamming"], k,
+        rerank, queries, corpus, vec_col, id_col,
     )
 
 
@@ -2634,12 +2482,7 @@ def ivf_sq8_topk(
     q = queries.select(
         F.col(id_col).alias("qid"),
         F.col(vec_col).alias("qv"),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(
-                x.cast("double") * F.lit(sq_quant) + F.lit(0.5)
-            ).cast("bigint"),
-        ).alias("qq"),
+        _sq8_grid(F.col(vec_col), sq_quant).alias("qq"),
     )
     assigned, probes = _ivf_probes(
         q, corpus, n_cells, n_probe, dim, quant, vec_col, id_col, seed,
@@ -2650,29 +2493,15 @@ def ivf_sq8_topk(
         .where(F.col("code_norm_sq") > 0)
         .withColumnRenamed(id_col, "nid")
     )
-    ip = F.aggregate(
-        F.zip_with(
-            F.col("qq"), F.col("codes"), lambda a, b: a * b.cast("bigint")
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
     scored = (
         F.broadcast(probes)
         .join(enc, ["cell"])
         .where(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", ip.alias("ip"), "code_norm_sq")
+        .select("qid", "nid", _sq8_ip().alias("ip"), "code_norm_sq")
     )
     return _ranked_shortlist(
-        scored,
-        _sq8_order(),
-        ["qid", "nid", "ip", "code_norm_sq"],
-        k,
-        rerank,
-        queries,
-        corpus,
-        vec_col,
-        id_col,
+        scored, _sq8_order(), ["qid", "nid", "ip", "code_norm_sq"], k,
+        rerank, queries, corpus, vec_col, id_col,
     )
 
 
@@ -2711,31 +2540,15 @@ def ivf_bq_topk(
     enc = bq_encode(
         assigned, vec_col, id_col, extra_cols=("cell",)
     ).withColumnRenamed(id_col, "nid")
-    hamming = F.aggregate(
-        F.zip_with(
-            F.col("qwords"),
-            F.col("words"),
-            lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("bigint"),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    ).cast("int")
     scored = (
         F.broadcast(probes)
         .join(enc, ["cell"])
         .where(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", hamming.alias("hamming"))
+        .select("qid", "nid", _hamming().alias("hamming"))
     )
     return _ranked_shortlist(
-        scored,
-        _bq_order(),
-        ["qid", "nid", "hamming"],
-        k,
-        rerank,
-        queries,
-        corpus,
-        vec_col,
-        id_col,
+        scored, _bq_order(), ["qid", "nid", "hamming"], k,
+        rerank, queries, corpus, vec_col, id_col,
     )
 
 
@@ -2780,16 +2593,7 @@ def ivf_pq_topk(
     amortizes across queries.
     """
     sub = dim // m
-    h = F.md5(F.concat(F.lit(seed), F.col(id_col).cast("string")))
-    seeds = (
-        corpus.select(
-            F.col(vec_col).alias("sv"), h.alias("_h"), F.col(id_col).alias("_sid")
-        )
-        .orderBy("_h", "_sid")
-        .limit(codebook_k)
-        .withColumn("rank", F.row_number().over(Window.orderBy("_h", "_sid")) - 1)
-        .select("sv", "rank")
-    )
+    seeds = _pq_codebook(corpus, codebook_k, vec_col, id_col, seed)
 
     def cdist(j: int):
         return _pq_grid_dist(vec_col, "sv", j, sub, quant)
@@ -2803,12 +2607,7 @@ def ivf_pq_topk(
     )
     total = sum(F.col(f"_d{j}") for j in range(1, m)) + F.col("_d0")
     codes = pairs.groupBy(id_col).agg(
-        *[
-            (F.min(F.col(f"_d{j}") * codebook_k + F.col("rank")) % codebook_k)
-            .cast("int")
-            .alias(f"c{j}")
-            for j in range(m)
-        ],
+        *_pq_codes(m, codebook_k),
         (F.min(total * codebook_k + F.col("rank")) % codebook_k)
         .cast("int")
         .alias("cell"),
@@ -2821,12 +2620,7 @@ def ivf_pq_topk(
     )
     qtotal = sum(F.col(f"_d{j}") for j in range(1, m)) + F.col("_d0")
     tables = qpairs.groupBy("qid").agg(
-        *[
-            F.array_sort(
-                F.collect_list(F.struct(F.col("rank"), F.col(f"_d{j}").alias("d")))
-            ).alias(f"_t{j}")
-            for j in range(m)
-        ],
+        *_adc_tables(m),
         F.slice(
             F.array_sort(
                 F.collect_list(F.struct(qtotal.alias("td"), F.col("rank")))
@@ -2844,24 +2638,15 @@ def ivf_pq_topk(
     )
 
     # -- search: equi-join on cell, ADC score, top-k -------------------------
-    adist = None
-    for j in range(m):
-        term = F.element_at(F.col(f"_t{j}"), F.col(f"c{j}") + 1)["d"]
-        adist = term if adist is None else adist + term
     scored = (
         codes.join(F.broadcast(probe_tables), ["cell"])
         .where(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", adist.alias("adist"))
+        .select("qid", "nid", _adc_dist(m).alias("adist"))
     )
-    w = Window.partitionBy("qid").orderBy(F.col("adist").asc(), F.col("nid").asc())
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= (rerank if rerank else k))
-        .select("qid", "nid", "adist", "rank")
+    return _ranked_shortlist(
+        scored, _adc_order(), ["qid", "nid", "adist"], k,
+        rerank, queries, corpus, vec_col, id_col,
     )
-    if rerank:
-        return _exact_rerank(shortlist, queries, corpus, k, vec_col, id_col)
-    return shortlist
 
 
 def _res_grid_arr(v: Column, cv: Column, quant: int) -> Column:
@@ -2952,16 +2737,7 @@ def ivf_pq_residual_topk(
         cents=cents,
     )
     # codebook: the hash-sampled seeds' residuals to THEIR cells
-    h = F.md5(F.concat(F.lit(seed), F.col(id_col).cast("string")))
-    seeds = (
-        corpus.select(
-            F.col(vec_col).alias("sv"), h.alias("_h"), F.col(id_col).alias("_sid")
-        )
-        .orderBy("_h", "_sid")
-        .limit(codebook_k)
-        .withColumn("rank", F.row_number().over(Window.orderBy("_h", "_sid")) - 1)
-        .select("sv", "rank")
-    )
+    seeds = _pq_codebook(corpus, codebook_k, vec_col, id_col, seed)
     sassign = ivf_assign_hashed(
         seeds, cents, n_cells, dim, quant, vec_col="sv", id_col="rank"
     )
@@ -2993,15 +2769,7 @@ def ivf_pq_residual_topk(
     )
     codes = (
         cpairs.groupBy(id_col)
-        .agg(
-            F.any_value("cell").alias("cell"),
-            *[
-                (F.min(F.col(f"_d{j}") * codebook_k + F.col("rank")) % codebook_k)
-                .cast("int")
-                .alias(f"c{j}")
-                for j in range(m)
-            ],
-        )
+        .agg(F.any_value("cell").alias("cell"), *_pq_codes(m, codebook_k))
         .withColumnRenamed(id_col, "nid")
     )
 
@@ -3020,33 +2788,15 @@ def ivf_pq_residual_topk(
             for j in range(m)
         ],
     )
-    tables = qpairs.groupBy("qid", "cell").agg(
-        *[
-            F.array_sort(
-                F.collect_list(F.struct(F.col("rank"), F.col(f"_d{j}").alias("d")))
-            ).alias(f"_t{j}")
-            for j in range(m)
-        ]
-    )
-    adist = None
-    for j in range(m):
-        term = F.element_at(F.col(f"_t{j}"), F.col(f"c{j}") + 1)["d"]
-        adist = term if adist is None else adist + term
+    tables = qpairs.groupBy("qid", "cell").agg(*_adc_tables(m))
     scored = (
         codes.join(F.broadcast(tables), ["cell"])
         .where(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", adist.alias("adist"))
+        .select("qid", "nid", _adc_dist(m).alias("adist"))
     )
     return _ranked_shortlist(
-        scored,
-        [F.col("adist").asc(), F.col("nid").asc()],
-        ["qid", "nid", "adist"],
-        k,
-        rerank,
-        queries,
-        corpus,
-        vec_col,
-        id_col,
+        scored, _adc_order(), ["qid", "nid", "adist"], k,
+        rerank, queries, corpus, vec_col, id_col,
     )
 
 
@@ -3090,13 +2840,8 @@ def hard_negative_topk(
             F.round(cosine(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("nid").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "qlabel", "nid", "nlabel", "cos_sim", "rank")
+    return _ranked_shortlist(
+        scored, _cos_order(), ["qid", "qlabel", "nid", "nlabel", "cos_sim"], k
     )
 
 
